@@ -45,8 +45,8 @@ object Bench {
     // every leg runs 2-4x slower, and in r16 the cumulative leg +
     // diagnostic cost pushed the 8-cpu run past the driver's window — the
     // scaling block came back EMPTY. Bound the non-query work there:
-    // fewer forks per leg, no LC A/B, no in-session extras (each cut is
-    // recorded in `skipped`).
+    // fewer forks per leg, no in-session extras (each cut is recorded in
+    // `skipped`).
     val lowCore = cpus.toIntOption.exists(_ <= 16)
     val spark = SparkSession.builder()
       // local[N,4]: 4 task attempts — local mode ignores the
@@ -194,7 +194,7 @@ object Bench {
     // (r14: q_triangles 96.7s × 3 samples ≈ 4.8 min spent confirming one
     // obviously-inflated band). The resulting MEDIANS replace first-pass
     // times in the graded `queries` map, so this runs after the graded
-    // ingest legs but before pure diagnostics (the LC A/B).
+    // ingest legs.
     val MoverFirstPassCapSec = 30.0
     def runVariance(): Unit = if (only.isEmpty && repeats > 1) {
       variance = rerunNames.flatMap { name =>
@@ -274,9 +274,6 @@ object Bench {
     var wireFallback = -1.0
     var batchFallback = -1.0
     var streamingFallback = -1.0
-    // LC dictionary-encode A/B on the wire topology (diagnostic):
-    // (mode, events/sec, telemetry) for dict-on vs forced-plain forks.
-    var lcAb: Seq[(String, Double, Tele)] = Nil
 
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.size / 2)
@@ -300,9 +297,6 @@ object Bench {
       val canaryJson = canary.sortBy(_._1).map { case (n, ref, t) =>
         f""""$n":{"ref":$ref%.3f,"sec":$t%.3f,"ratio":${t / ref}%.2f}"""
       }.mkString("{", ",", "}")
-      val lcAbJson = lcAb.map { case (m, v, t) =>
-        f"""{"mode":"$m","value":$v%.0f,"telemetry":${teleJson(t)}}"""
-      }.mkString("[", ",", "]")
       val total = finalResults.map(_._2).sum
       val wireRate = median(wireRuns)
       val (ingestRate, ingestPruned) =
@@ -339,8 +333,6 @@ object Bench {
         """"relative_movers_note":"queries whose first pass moved >1.5x in either direction vs the previous round's recorded median (BENCH_LAST.json); each carries a variance band above so the next verdict can separate noise from regression without a re-run; capped at the 20 largest ratios; unconfirmed:true = first pass exceeded the 30s per-mover wall cap, so its re-runs were skipped and the queries entry is the UNCONFIRMED single sample",""" +
         s""""canary":$canaryJson,""" +
         """"canary_note":"ten stable mid-cost queries vs their stored healthy-window medians (tools/bench_canary.json, from the four complete r13 sweeps); the MEDIAN ratio classifies the sweep: <=1.3 healthy, else contended (sweep_health in the tail) -- so a storm-tinted sweep is identifiable from the artifact alone",""" +
-        s""""wire_lc_ab":$lcAbJson,""" +
-        """"wire_lc_ab_note":"diagnostic A/B isolating the LowCardinality dictionary-encode cost on the measured wire INSERT path (3 of the 35 wire columns are LC): the same 2M-event topology forked with dict encode on (default) vs forced plain inner form (SPARK_GRAFT_LC_ENCODE=plain), same telemetry, in ALTERNATING order dict/plain/plain/dict -- the first post-in-session fork systematically pays a heap-quiesce penalty, so a fixed order would bias the pair; empty = budget cut it",""" +
         s""""ingest_batch_runs":$batchRunsJson,""" +
         wireRuns.map(r => f"$r%.0f").mkString(""""ingest_wire_runs":[""", ",", "],") +
         streamingAttempts.map(a => f"${a._1}%.0f")
@@ -402,8 +394,8 @@ object Bench {
 
     // PHASE ORDER (contract order — graded evidence first, diagnostics
     // only with whatever budget remains): query sweep (single pass, done
-    // above) → wire → batch → streaming → in-session → LC-dict A/B →
-    // mover/variance re-runs. The r14 storm proved the old order (re-runs
+    // above) → wire → batch → streaming → in-session → mover/variance
+    // re-runs. The r14 storm proved the old order (re-runs
     // before the legs) lets diagnostics starve the graded record.
     // Test-only knob (never set by the driver): swap the wire fork's main
     // class so the fork-failure machinery — timeout destroy, 2-failure
@@ -422,7 +414,7 @@ object Bench {
         .flatMap(_.toIntOption).getOrElse(if (lowCore) 2 else 3)
       if (lowCore)
         skipped += "low-core run: wire 2 forks, batch 2, streaming 1, " +
-          "no LC A/B, no in-session extras (scaling leg must fit the driver window)"
+          "no in-session extras (scaling leg must fit the driver window)"
       val wl = runLeg[Double](wireForks, "wire", skipped, () => budgetLeft,
         wireDiscards, loadGated = true, identity, failed = _ <= 0) {
         forkedLine(wireMainClass, Seq("2000000", "8"),
@@ -535,60 +527,9 @@ object Bench {
 
       // ================= diagnostics from here on: every graded number
       // above is already on disk, so a budget cut from here truncates
-      // only explanatory depth. ORDER (r17): variance/mover re-runs come
-      // BEFORE the LC A/B — they are not pure diagnostics, their medians
-      // REPLACE storm-hit first-pass times in the graded `queries` map,
-      // while the A/B informs nothing the driver grades. In the r17
-      // entry run the A/B's two clipped-timeout forks consumed the last
-      // minutes and every re-run was skipped.
+      // only explanatory depth. The variance/mover re-runs' medians
+      // REPLACE storm-hit first-pass times in the graded `queries` map.
       runVariance()
-      emit(partial = true)
-
-      // ---- LC dictionary-encode A/B on the wire topology (same
-      // workload + telemetry): r14 put the dict encoder in the measured
-      // INSERT path and the wire band halved in the same round — this
-      // measures the two forms directly instead of arguing jitter. The
-      // order ALTERNATES (dict, plain, plain, dict) because the first
-      // fork systematically pays the post-in-session heap debt (the r15
-      // sweep-1/2 dict-first forks both hit the 90 s quiesce timeout
-      // while the second fork started on a drained heap) — a fixed
-      // order would bias the comparison, alternation cancels it.
-      if (lowCore) {
-        // diagnostics only — the low-core run exists for the query scaling
-        // block and must not spend 4 forks on an A/B the main run owns
-        skipped += "wire LC A/B (low-core run)"
-      } else if (wireEnvBlocked) {
-        // a boot-dead wire topology cannot produce an A/B either — don't
-        // burn 4 more timeouts proving it
-        skipped += "wire LC A/B (environment-blocked: wire leg fail-fasted)"
-      } else if (budgetLeft) {
-        val plainEnv = Seq("SPARK_GRAFT_LC_ENCODE" -> "plain")
-        var abConsecFails = 0
-        lcAb = Seq(
-          ("dict", Seq.empty[(String, String)]), ("plain", plainEnv),
-          ("plain", plainEnv), ("dict", Seq.empty[(String, String)])).flatMap {
-          case (mode, env) =>
-            if (abConsecFails >= 2) {
-              skipped += s"wire LC A/B '$mode' fork (environment-blocked: " +
-                "2 consecutive fork failures)"
-              None
-            } else if (!budgetLeft) {
-              skipped += s"wire LC A/B '$mode' fork (budget exceeded)"
-              None
-            } else {
-              val (v, t) = instrumented {
-                forkedLine(wireMainClass, Seq("2000000", "8"),
-                  "\"wire_ingest_throughput\"", env) match {
-                  case Left(why) =>
-                    System.err.println(s"wire LC A/B '$mode' failed: $why"); -1.0
-                  case Right(l) => num("value", l).getOrElse(-1.0)
-                }
-              }
-              if (v <= 0) abConsecFails += 1 else abConsecFails = 0
-              Some((mode, v, t))
-            }
-        }
-      } else skipped += "wire LC A/B (budget exceeded)"
       emit(partial = true)
     }
 
@@ -812,7 +753,6 @@ object Bench {
     * hostname resolution must never be a boot dependency. */
   private[graft] def forkedLine(mainClass: String, args: Seq[String],
                                 marker: String,
-                                extraEnv: Seq[(String, String)] = Nil,
                                 timeoutSec: Int = defaultForkTimeoutSec): Either[String, String] =
     try {
       import scala.sys.process._
@@ -831,8 +771,7 @@ object Bench {
       val err = new java.util.ArrayDeque[String]()
       val head = new scala.collection.mutable.ArrayBuffer[String]()
       val headPat = java.util.regex.Pattern.compile("(Exception|Error)([:\\s]|$)")
-      val proc = Process(cmd, cwd = None, extraEnv = (sys.env.toSeq ++ extraEnv): _*)
-        .run(ProcessLogger(
+      val proc = Process(cmd).run(ProcessLogger(
           l => { out.synchronized { out.append(l).append('\n') }; () },
           l => err.synchronized {
             if (err.size >= 5) err.removeFirst()

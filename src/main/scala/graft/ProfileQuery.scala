@@ -6,10 +6,11 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Dev utility (not part of the driver contract): run one or more driver
-  * queries with a stage-level listener and print where the wall time goes —
-  * per-stage duration, task count, shuffle bytes, and the job count — so an
-  * optimization pass can tell fixed per-job overhead from real operator
-  * cost. `tools/run.sh graft.ProfileQuery <sfDir> <q1> [q2 ...]`; set
+  * queries with a stage-level listener and print each one's formatted
+  * physical plan, then where the wall time goes — per-stage duration, task
+  * count, shuffle bytes, and the job count — so an optimization pass can
+  * tell fixed per-job overhead from real operator cost.
+  * `tools/run.sh graft.ProfileQuery <sfDir> <q1> [q2 ...]`; set
   * SPARK_GRAFT_PROFILE_RUNS for more repetitions (default 2 — first run
   * pays codegen/JIT warmup, the warm run is the honest one).
   */
@@ -59,6 +60,7 @@ object ProfileQuery {
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 
     args.tail.foreach { q =>
+      SparkEntry.queries(q)(spark, sfDir).explain("formatted")
       (1 to runs).foreach { i =>
         try spark.catalog.clearCache() catch { case _: Throwable => () }
         System.gc()

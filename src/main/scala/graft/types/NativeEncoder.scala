@@ -37,17 +37,6 @@ import org.apache.spark.sql.Row
   * that row and the block stays well-formed. */
 object NativeEncoder {
 
-  /** Bench/test A/B knob: `SPARK_GRAFT_LC_ENCODE=plain` (env, for forked
-    * bench JVMs) or system property `graft.lc.encode=plain` (for
-    * in-process tests) forces every top-level LowCardinality column to
-    * ship the plain inner form (the pre-dictionary behavior, server
-    * converts on insert) so the dictionary encoder's CPU-vs-bytes trade
-    * can be measured in isolation on the same workload. Each writer
-    * captures it once at construction — never set in production paths. */
-  private[types] def forcePlainLc: Boolean =
-    sys.props.get("graft.lc.encode").orElse(sys.env.get("SPARK_GRAFT_LC_ENCODE"))
-      .exists(_.equalsIgnoreCase("plain"))
-
   /** Growable byte buffer whose write position can be rolled back — the
     * primitive the per-row atomicity needs (ByteArrayOutputStream can only
     * reset to zero). */
@@ -312,10 +301,7 @@ object NativeEncoder {
       32L + dictBuf.position + keys.size.toLong * (1 << widthCode)
     private def plainFormBytes: Long =
       (if (nullable) keys.size.toLong else 0L) + plainValueBytes
-    /** A/B knob snapshot (see [[forcePlainLc]]), taken per writer so the
-      * per-row byteSize path never re-reads props/env. */
-    private val forcePlain = forcePlainLc
-    private def useDict: Boolean = !forcePlain && dictFormBytes < plainFormBytes
+    private def useDict: Boolean = dictFormBytes < plainFormBytes
     def byteSize: Long = if (useDict) dictFormBytes else plainFormBytes
     override def declaredType: Option[String] =
       if (useDict) Some(s"LowCardinality(${wireType(inner)})") else None

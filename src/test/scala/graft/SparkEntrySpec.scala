@@ -10,21 +10,22 @@ class SparkEntrySpec extends SparkSpec {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
-      assert(df.count() >= 0, s"$name failed to execute")
+      // noop materializes every column; count() lets Catalyst drop the
+      // projections it does not need, a failing one included
+      try df.write.format("noop").mode("overwrite").save()
+      catch { case e: Exception => fail(s"$name failed to materialize", e) }
     }
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracleSql without queries entry: $extra")
-  }
-
-  test("every query has a DuckDB oracle (no rows-only entries)") {
-    // as of round 3 every driver query is hash-checked against an oracle;
-    // a new query landing without one should be a deliberate, visible
-    // decision, not an accident
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without an oracle: $missing")
+  test("a streaming query leaves no view behind and reruns to the same rows") {
+    val views = spark.catalog.listTables().collect().map(_.name).toSet
+    def run() = SparkEntry.queries("q_dedup_windowed_stream")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    val first = run()
+    val second = run()
+    assert(first.nonEmpty)
+    assert(first == second)
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == views)
   }
 
   test("q_growth_accounting matches an in-memory state-machine model") {

@@ -476,27 +476,6 @@ class NativeDecodeGuardSpec extends AnyFunSuite {
     assert(kBrain.rows("default", "lc_mk")(7)("m") == kvals(7))
   }
 
-  test("LC ENCODE: the forced-plain A/B knob ships the inner form, value-identical") {
-    // graft.lc.encode=plain (the in-process spelling of the bench's
-    // SPARK_GRAFT_LC_ENCODE=plain fork env) must force the plain inner
-    // form even where the dictionary form is measurably smaller — the
-    // lever the wire-leg LC A/B isolates the encode cost with
-    val vals = (0 until 10000).map(i => s"kind${i % 3}")
-    System.setProperty("graft.lc.encode", "plain")
-    try {
-      val body = lcBlock("LowCardinality(String)", vals)
-      assert(!new String(body, "UTF-8").contains("LowCardinality"),
-        "forced-plain must declare the inner type")
-      val rows = decodeAll(body, Seq("t" -> CHType.parse("LowCardinality(String)")))
-      assert(rows.size == 10000)
-      assert(rows.zipWithIndex.forall { case (r, i) =>
-        r.getUTF8String(0).toString == s"kind${i % 3}" })
-    } finally System.clearProperty("graft.lc.encode")
-    // knob off: the same data picks dictionary form again
-    assert(new String(lcBlock("LowCardinality(String)", vals), "UTF-8")
-      .contains("LowCardinality(String)"))
-  }
-
   test("LC ENCODE: a poison row rolls back its dictionary entry, not just its key") {
     val t = CHType.parse("LowCardinality(FixedString(2))")
     val b = new NativeEncoder.BlockBuilder(Seq("t"), Seq(t))
