@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sink.SinkMapper
@@ -53,12 +53,8 @@ object IngestBench {
     ColumnMapping("bytes_in", "bytes_in", "Int64"),
     ColumnMapping("bytes_out", "bytes_out", "Int64"))
 
-  /** Synthesize n events of ~1.5 KB JSON with per-row variation. */
-  def syntheticJson(spark: SparkSession, n: Long): DataFrame =
-    jsonFor(spark.range(n).toDF("id"))
-
-  /** The same event JSON built from any `id` long column (batch range or a
-    * streaming rate source). */
+  /** ~1.5 KB event JSON with per-row variation, built from any `id` long
+    * column (batch range or a streaming rate source). */
   def jsonFor(ids: DataFrame): DataFrame = {
     val pad = "x" * 700 // static filler to reach the ~1.5 KB baseline shape
     ids.select(concat(
@@ -86,60 +82,47 @@ object IngestBench {
     ).as("value"))
   }
 
-  /** Run the ingest pipeline over n synthetic events; returns events/sec.
-    *
-    * Two validation scopes are measured (both reported by `main`):
-    *   - pruneToMapped=true: the declared schema is pruned to the 12 mapped
-    *     fields before parsing — the production-relevant configuration (the
-    *     pipeline only ever reads mapped fields), but validation scope
-    *     shrinks with it: unmapped fields are not type-checked.
-    *   - pruneToMapped=false: all 35 declared fields are parsed and
-    *     type-validated per record — the reference's semantics (it
-    *     gjson-validates every declared field), so this is the
-    *     apples-to-apples number for BASELINE.md comparison. */
-  def run(spark: SparkSession, n: Long, pruneToMapped: Boolean = true): Double = {
-    val declared = EngineSchema.structFor(fields)
-    val schema =
-      if (pruneToMapped) JsonIngest.pruneSchema(declared, mappings.map(_.sourceField))
-      else declared
-    val t0 = System.nanoTime()
-    val raw = syntheticJson(spark, n)
-    val (valid, _) = JsonIngest.ingest(raw, "value", schema)
-    SinkMapper(mappings)(valid)
-      .write.format("noop").mode("overwrite").save()
-    n / ((System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // local[N,4]: 4 task attempts — local mode ignores the
-      // spark.task.maxFailures conf (the master string carries it), and
-      // at 1 attempt a single transient socket hiccup under host jitter
-      // aborts the whole bench job (the r13 graded-run failure mode)
-      .master(s"local[$cpus,4]")
-      // boot armor: driver RPC pinned to loopback — the r15 driver-window
-      // wire fork died in RpcEnv.setupEndpointRefByURI under host churn
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+
+    /** Run the ingest pipeline over `events` synthetic events; returns
+      * events/sec.
+      *
+      * Two validation scopes are measured (both reported below):
+      *   - pruneToMapped=true: the declared schema is pruned to the 12 mapped
+      *     fields before parsing — the production-relevant configuration (the
+      *     pipeline only ever reads mapped fields), but validation scope
+      *     shrinks with it: unmapped fields are not type-checked.
+      *   - pruneToMapped=false: all 35 declared fields are parsed and
+      *     type-validated per record — the reference's semantics (it
+      *     gjson-validates every declared field), so this is the
+      *     apples-to-apples number for BASELINE.md comparison. */
+    def run(events: Long, pruneToMapped: Boolean = true): Double = {
+      val declared = EngineSchema.structFor(fields)
+      val schema =
+        if (pruneToMapped) JsonIngest.pruneSchema(declared, mappings.map(_.sourceField))
+        else declared
+      val t0 = System.nanoTime()
+      val raw = jsonFor(spark.range(events).toDF("id"))
+      val (valid, _) = JsonIngest.ingest(raw, "value", schema)
+      SinkMapper(mappings)(valid)
+        .write.format("noop").mode("overwrite").save()
+      events / ((System.nanoTime() - t0) / 1e9)
+    }
+
     // Warm BOTH parse paths before measuring either — the JSON parse path
     // needs substantial JIT warm-up (~500k events), and measuring one scope
     // while only the other is warm skews the comparison. Measurements then
     // alternate pruned/full twice, best-of-two per scope, so continuing JIT
     // drift over the run can't systematically favor whichever went last.
     val warm = math.min(n, 500000L)
-    run(spark, warm); run(spark, warm, pruneToMapped = false)
+    run(warm); run(warm, pruneToMapped = false)
     val rates = (0 until 2).map { _ =>
       System.gc()
-      val p = run(spark, n)
+      val p = run(n)
       System.gc()
-      val f = run(spark, n, pruneToMapped = false)
+      val f = run(n, pruneToMapped = false)
       (p, f)
     }
     val pruned = rates.map(_._1).max

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -36,17 +35,9 @@ import graft.types.EngineSchema
   */
 object StreamingIngestBench {
 
-  /** One measurement's outcome: median steady-state rate, mean rate,
-    * steady batch count, steady rows, and the query failure message ("" =
-    * none). */
-  final case class Result(rps: Double, meanRps: Double, batches: Int,
-                          rows: Long, error: String)
-
-  /** Run the streaming measurement against an EXISTING session (does not
-    * stop it) — shared by [[main]] (forked graded leg) and the graded
-    * bench's in-session fallback for a boot-dead streaming leg. */
-  def measure(spark: SparkSession, seconds: Int): Result = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def main(args: Array[String]): Unit = {
+    val seconds = args.headOption.map(_.toInt).getOrElse(80)
+    val spark = LocalSession()
     val ckpt = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"),
@@ -54,7 +45,7 @@ object StreamingIngestBench {
     val rowsPerBatch = 2000000L
     val rate = spark.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch)
-      .option("numPartitions", cpus.toInt)
+      .option("numPartitions", LocalSession.cpus.toInt)
       .load()
       .select(col("value").as("id"))
     val declared = EngineSchema.structFor(IngestBench.fields)
@@ -86,11 +77,14 @@ object StreamingIngestBench {
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
     } catch { case _: Throwable => () }
+    progress.foreach(p => System.err.println(
+      s"batch rows=${p.numInputRows} ms=${p.durationMs.get("triggerExecution")}"))
     // A dead query must be loud: the value -1 alone cost round 4 its
-    // streaming parity number with no trace of why.
+    // streaming parity number with no trace of why. The cause is printed
+    // last, so it is in the stderr tail a failed fork is recorded with.
     failure.foreach { e =>
-      System.err.println(s"streaming query FAILED: ${e.message}")
       e.getCause match { case null => () case c => c.printStackTrace() }
+      System.err.println(s"streaming query FAILED: ${e.getClass.getName}: ${e.message}")
     }
     val data = progress.filter(_.numInputRows > 0)
     if (data.length <= warmupBatches)
@@ -98,8 +92,6 @@ object StreamingIngestBench {
         s"streaming bench produced ${progress.length} progress updates, " +
           s"${data.length} with data — too few for a steady-state rate " +
           s"(need > $warmupBatches data batches)")
-    progress.foreach(p => System.err.println(
-      s"batch rows=${p.numInputRows} ms=${p.durationMs.get("triggerExecution")}"))
     // Steady state: drop warm-up (cold JIT/codegen), then the rate is the
     // MEDIAN per-batch rows/triggerExecution — one stalled batch (host
     // steal, full GC) shifts the median by at most one rank, where the
@@ -114,34 +106,13 @@ object StreamingIngestBench {
     val rows = steady.map(_.numInputRows).sum
     val secs = steady.map(_.durationMs.get("triggerExecution").toLong).sum / 1000.0
     val meanRps = if (secs > 0) rows / secs else -1.0
-    Result(rps, meanRps, steady.length, rows,
-      failure.map(_.message).getOrElse(""))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val seconds = args.headOption.map(_.toInt).getOrElse(80)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // local[N,4]: 4 task attempts — local mode ignores the
-      // spark.task.maxFailures conf (the master string carries it), and
-      // at 1 attempt a single transient socket hiccup under host jitter
-      // aborts the whole bench job (the r13 graded-run failure mode)
-      .master(s"local[$cpus,4]")
-      // boot armor: driver RPC pinned to loopback — the r15 driver-window
-      // wire fork died in RpcEnv.setupEndpointRefByURI under host churn
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val r = measure(spark, seconds)
     spark.stop()
-    println(f"""{"metric":"streaming_ingest_throughput","value":${r.rps}%.0f,""" +
-      s""""unit":"events_per_sec","batches":${r.batches},""" +
-      s""""rows":${r.rows},""" +
-      f""""mean_events_per_sec":${r.meanRps}%.0f,""" +
+    println(f"""{"metric":"streaming_ingest_throughput","value":$rps%.0f,""" +
+      s""""unit":"events_per_sec","batches":${steady.length},""" +
+      s""""rows":$rows,""" +
+      f""""mean_events_per_sec":$meanRps%.0f,""" +
       """"note":"median steady-state per-batch Structured Streaming rate (rate-micro-batch source, fixed 2M rows/batch; 2 warm-up batches dropped; window auto-extends to 2x when <5 steady batches completed); same 35-field full-schema validation as the batch bench"}""")
+    // No rate is a failed run: exit non-zero so the bench records why.
+    if (!(rps > 0)) { System.out.flush(); sys.exit(1) }
   }
 }

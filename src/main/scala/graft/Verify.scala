@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // local[N,4]: 4 task attempts — local mode ignores the
-      // spark.task.maxFailures conf (the master string carries it), and
-      // at 1 attempt a single transient socket hiccup under host jitter
-      // aborts the whole bench job (the r13 graded-run failure mode)
-      .master(s"local[$cpus,4]")
-      // boot armor: driver RPC pinned to loopback — the r15 driver-window
-      // wire fork died in RpcEnv.setupEndpointRefByURI under host churn
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b limits the dump (iteration aid); the driver
     // never sets it, so round verifies always cover every query

@@ -47,8 +47,8 @@ object WireIngestBench {
 
   /** One full pass: read [0, n) off the wire, validate + map, INSERT over
     * HTTP. Returns events/sec. */
-  def run(spark: SparkSession, brokers: String, topic: String, n: Long,
-          sink: ClickHouseSink.Config): Double = {
+  private def run(spark: SparkSession, brokers: String, topic: String,
+                  n: Long, sink: ClickHouseSink.Config): Double = {
     val t0 = System.nanoTime()
     val raw = spark.read.format("graft-kafka")
       .option("brokers", brokers).option("topic", topic)
@@ -56,7 +56,7 @@ object WireIngestBench {
       // more Spark tasks than Kafka partitions: each task fetches a
       // sub-range and POSTs its own INSERT stream — the same splitting a
       // wide cluster uses for backfills
-      .option("minPartitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .option("minPartitions", LocalSession.cpus)
       .load()
       .selectExpr("cast(value as string) as value")
     val declared = EngineSchema.structFor(IngestBench.fields)
@@ -72,14 +72,10 @@ object WireIngestBench {
     n / ((System.nanoTime() - t0) / 1e9)
   }
 
-  /** Set up the loopback Kafka cluster + ClickHouse fixture, drain
-    * `passes` full passes of `n` events through the wire topology, tear
-    * the fixtures down, and return (best rate, delivered count). Shared
-    * by [[main]] (the forked graded leg) and the graded bench's
-    * in-session fallback — when no fork can boot at all the tail still
-    * needs SOME labeled wire number. */
-  def setupAndRun(spark: SparkSession, n: Long, parts: Int,
-                  passes: Int): (Double, Long) = {
+  def main(args: Array[String]): Unit = {
+    val n = args.headOption.map(_.toLong).getOrElse(2000000L)
+    val parts = args.lift(1).map(_.toInt).getOrElse(8)
+    val spark = LocalSession()
     val kafka = new Cluster()
     kafka.addBroker()
     val per = (n + parts - 1) / parts
@@ -96,33 +92,20 @@ object WireIngestBench {
       "message" -> "String", "status" -> "LowCardinality(String)",
       "duration_ms" -> "Float64", "pod" -> "String", "image" -> "String",
       "retries" -> "Int32", "bytes_in" -> "Int64", "bytes_out" -> "Int64"))
-    // SPARK_GRAFT_WIRE_FORMAT: JSONEachRow | RowBinary | Native (HTTP
-    // transport) or NativeTcp (the native TCP protocol pair — same brain,
-    // same validators, streamed blocks on kept-open sockets). Graded
-    // default = Native: it is the format the reference's own driver
-    // inserts (clickhouse-go sends native columnar blocks), and it
-    // measured consistently faster end-to-end than RowBinary on this
-    // topology (solo same-box pairs: 290.7k vs 270.7k, 252.8k vs 176.4k
-    // ev/s) — per-row dispatch disappears on both the encode and the
-    // fixture's decode side. r10 and earlier graded runs used RowBinary;
-    // the emitted "format" field keeps rounds comparable.
-    val fmt = sys.env.getOrElse("SPARK_GRAFT_WIRE_FORMAT", "Native")
-    val tcp: Option[graft.sink.MiniClickHouseTcpServer] =
-      if (fmt == "NativeTcp") {
-        val t = new graft.sink.MiniClickHouseTcpServer(ch); t.start(); Some(t)
-      } else None
-    val sink = ClickHouseSink.Config(
-      url = tcp.fold(ch.endpoint)(_.endpoint), database = "default",
-      table = "wire_bench",
-      mappings = IngestBench.mappings, maxBatchSize = 50000,
-      httpFormat = if (fmt == "NativeTcp") "Native" else fmt)
+    // FORMAT Native over HTTP: the format the reference's own driver
+    // inserts (clickhouse-go sends native columnar blocks), and it measured
+    // consistently faster end-to-end than RowBinary on this topology (solo
+    // same-box pairs: 290.7k vs 270.7k, 252.8k vs 176.4k ev/s) — per-row
+    // dispatch disappears on both the encode and the fixture's decode side.
+    val sink = ClickHouseSink.Config(url = ch.endpoint, database = "default",
+      table = "wire_bench", mappings = IngestBench.mappings,
+      maxBatchSize = 50000, httpFormat = "Native")
     val brokers = kafka.brokerList.map(_.address).mkString(",")
+    val passes = 2
     try {
-      // Multiple full passes, max recorded: the first doubles as JIT
-      // warm-up (it reads slightly cold; the max discards it unless a
-      // later pass hits host steal — the same guard shape as IngestBench,
-      // one pass cheaper to keep the graded bench inside its wall
-      // budget). Pass 1 also proves end-to-end delivery.
+      // Two full passes, max recorded: the first doubles as JIT warm-up (it
+      // reads slightly cold; the max discards it unless the second pass hits
+      // host steal). Both passes together prove end-to-end delivery.
       val rates = (0 until passes).map { _ =>
         System.gc()
         run(spark, brokers, "wire_bench", n, sink)
@@ -131,40 +114,12 @@ object WireIngestBench {
       require(sys.env.contains("SPARK_GRAFT_WIRE_STAGE") ||
         delivered == passes * n,
         s"delivered $delivered of ${passes * n} events")
-      (rates.max, delivered)
-    } finally {
-      kafka.stop(); tcp.foreach(_.stop()); ch.stop()
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val parts = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // local[N,4]: 4 task attempts — local mode ignores the
-      // spark.task.maxFailures conf (the master string carries it), and
-      // at 1 attempt a single transient socket hiccup under host jitter
-      // aborts the whole bench job (the r13 graded-run failure mode)
-      .master(s"local[$cpus,4]")
-      // boot armor: the r15 driver-window fork died in
-      // RpcEnv.setupEndpointRefByURI — driver RPC must never depend on
-      // the host's name resolution (forkedLine also pins these via -D,
-      // but the main must survive a bare manual launch too)
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val (rate, delivered) = setupAndRun(spark, n, parts, passes = 2)
-      val fmt = sys.env.getOrElse("SPARK_GRAFT_WIRE_FORMAT", "Native")
-      println(f"""{"metric":"wire_ingest_throughput","value":$rate%.0f,""" +
+      println(f"""{"metric":"wire_ingest_throughput","value":${rates.max}%.0f,""" +
         s""""unit":"events_per_sec","n":$n,"partitions":$parts,""" +
-        s""""delivered":$delivered,"format":"$fmt",""" +
-        """"note":"kafka wire protocol over loopback -> 35-field validate -> typed map -> ClickHouse INSERT (FORMAT Native over HTTP by default -- the reference driver's own insert format; NativeTcp = native TCP protocol; type-validating fixture server whose decode+validate CPU is INCLUDED in the measured time); max of 2 full passes, first doubles as JIT warm-up"}""")
-    } finally spark.stop()
+        s""""delivered":$delivered,"format":"Native",""" +
+        """"note":"kafka wire protocol over loopback -> 35-field validate -> typed map -> ClickHouse HTTP FORMAT Native INSERT (the reference driver's own insert format) into a type-validating fixture server whose decode+validate CPU is INCLUDED in the measured time; max of 2 full passes, first doubles as JIT warm-up"}""")
+    } finally {
+      kafka.stop(); ch.stop(); spark.stop()
+    }
   }
 }

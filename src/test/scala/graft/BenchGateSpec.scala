@@ -82,39 +82,6 @@ class BenchGateSpec extends AnyFunSuite {
     assert(batch == Seq(false, false, false))
   }
 
-  test("sweep health: median canary ratio decides; <5 canaries = unknown") {
-    def c(ratios: Double*): Seq[(String, Double, Double)] =
-      ratios.zipWithIndex.map { case (r, i) => (s"q$i", 2.0, 2.0 * r) }
-    assert(Bench.sweepHealthOf(c(1.0, 1.1, 1.2, 1.0, 1.1)) == "healthy")
-    // one storm-inflated canary cannot condemn a healthy sweep
-    assert(Bench.sweepHealthOf(c(1.0, 1.1, 1.2, 1.0, 19.0)) == "healthy")
-    // a uniformly inflated sweep (the r14 signature: everything ~1.5x)
-    assert(Bench.sweepHealthOf(c(1.5, 1.6, 1.4, 1.5, 1.7)) == "contended")
-    // one lucky canary cannot certify a storm
-    assert(Bench.sweepHealthOf(c(0.9, 1.6, 1.5, 1.7, 1.6)) == "contended")
-    assert(Bench.sweepHealthOf(c(1.0, 1.0, 1.0, 1.0)) == "unknown")
-    assert(Bench.sweepHealthOf(Nil) == "unknown")
-  }
-
-  test("canaryMedians reads the checked-in healthy floor (and is empty on a missing file)") {
-    val m = Bench.canaryMedians()
-    assert(m.size >= 10, s"tools/bench_canary.json must hold the canary set, got $m")
-    assert(m.values.forall(_ > 0))
-    assert(Bench.canaryMedians("does/not/exist.json").isEmpty)
-    // medians are SF-bound: the file says which scale recorded them, so a
-    // profiling run at another SF reads "unknown" instead of a false tag
-    assert(Bench.canarySf().contains("sf0.1"))
-    assert(Bench.canarySf("does/not/exist.json").isEmpty)
-    // the tag must match an EXACT path segment: substring containment
-    // would let sf0.1 medians grade an sf0.15 run, and an absent tag must
-    // never pass (both would mint a false "healthy")
-    assert(Bench.sfMatches("/root/testdata/sf0.1", "sf0.1"))
-    assert(!Bench.sfMatches("/root/testdata/sf0.15", "sf0.1"))
-    assert(!Bench.sfMatches("/root/testdata/sf0.01", "sf0.1"))
-    assert(Bench.sfMatches("sf0.1", "sf0.1"))
-    assert(!Bench.sfMatches("/root/testdata/sf0.1x/sub", "sf0.1"))
-  }
-
   test("a crashed fork's record names the exception class and message (head, not just tail)") {
     val r = Bench.forkedLine("graft.CrashForTest", Seq.empty, "\"never\"")
     assert(r.isLeft, "CrashForTest must exit non-zero")
@@ -158,32 +125,51 @@ class BenchGateSpec extends AnyFunSuite {
       s"the boot exception must be recoverable from the record: $msg")
   }
 
+  /** Runs a fork with fixed, quiet telemetry instead of the real
+    * quiesce/CPU gates (60-90 s of host waits per fork). */
+  private val ungated: (() => Bench.Sample) => (Bench.Sample, Bench.Tele) =
+    fork => (fork(), tele(0.1, 20.0, 50.0, 10.0))
+
   test("runLeg fail-fasts after 2 consecutive fork failures: remaining forks skipped, leg environment-blocked") {
-    System.setProperty("graft.bench.nogates", "1")
-    try {
-      val skipped = scala.collection.mutable.ArrayBuffer[String]()
-      val discards = scala.collection.mutable.ArrayBuffer[(Double, Bench.Tele)]()
-      var calls = 0
-      val r = Bench.runLeg[Double](5, "testleg", skipped, () => true, discards,
-        loadGated = false, identity, failed = _ <= 0) { calls += 1; -1.0 }
-      assert(calls == 2, s"a dead environment must cost 2 forks, not 5 (got $calls)")
-      assert(r.envBlocked)
-      assert(r.window == "unknown")
-      assert((3 to 5).forall(i => skipped.exists(_.contains(
-        s"fork $i/5 (environment-blocked"))),
-        s"forks 3..5 must be recorded as environment-blocked skips: $skipped")
-      // a single failure followed by successes RESETS the counter — one
-      // transient boot hiccup must not block the leg
-      val skipped2 = scala.collection.mutable.ArrayBuffer[String]()
-      var calls2 = 0
-      val r2 = Bench.runLeg[Double](4, "testleg2", skipped2, () => true, discards,
-        loadGated = false, identity, failed = _ <= 0) {
-        calls2 += 1; if (calls2 == 1) -1.0 else 100000.0 + calls2
-      }
-      assert(calls2 >= 4, s"one failure then successes must run the full leg")
-      assert(!r2.envBlocked)
-      assert(!skipped2.exists(_.contains("environment-blocked")), skipped2.toString)
-    } finally System.clearProperty("graft.bench.nogates")
+    var calls = 0
+    val r = Bench.runLeg(5, "testleg", () => true, loadGated = false, ungated) {
+      calls += 1; Left("boot crash")
+    }
+    assert(calls == 2, s"a dead environment must cost 2 forks, not 5 (got $calls)")
+    assert(r.envBlocked)
+    assert(r.window == "unknown")
+    assert((3 to 5).forall(i => r.skipped.exists(_.contains(
+      s"fork $i/5 (environment-blocked"))),
+      s"forks 3..5 must be recorded as environment-blocked skips: ${r.skipped}")
+    assert(r.failures == Seq("boot crash", "boot crash"))
+    // a single failure followed by successes RESETS the counter — one
+    // transient boot hiccup must not block the leg
+    var calls2 = 0
+    val r2 = Bench.runLeg(4, "testleg2", () => true, loadGated = false, ungated) {
+      calls2 += 1
+      if (calls2 == 1) Left("transient") else Right(s"""{"value":${100000 + calls2}}""")
+    }
+    assert(calls2 >= 4, s"one failure then successes must run the full leg")
+    assert(!r2.envBlocked)
+    assert(!r2.skipped.exists(_.contains("environment-blocked")), r2.skipped.toString)
+    assert(r2.failures == Seq("transient"))
+  }
+
+  test("a crashed fork's cause lands under ingest_<leg>_failures in a strict-JSON artifact") {
+    val r = Bench.runLeg(1, "wire", () => true, loadGated = true, ungated)(
+      Bench.forkedLine("graft.CrashForTest", Seq.empty, "\"wire_ingest_throughput\""))
+    val doc = Bench.artifact(Seq("q1_agg" -> 0.5), Map("wire" -> r), r.skipped,
+      budgetMin = 45, elapsedSec = 12.0, sfDir = "/root/testdata/sf0.01",
+      partial = false)
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
+    assert(j.get("ingest_wire_events_per_sec").asDouble() == -1.0)
+    val failures = j.get("ingest_wire_failures")
+    assert(failures.size() == 1, doc)
+    assert(failures.get(0).asText().contains("IllegalStateException"),
+      s"the artifact must name the exception class: $failures")
+    // legs that have not run yet are empty, and the stdout keys stay numbers
+    assert(j.get("ingest_batch_failures").size() == 0)
+    assert(j.get("ingest_events_per_sec").asDouble() == -1.0)
   }
 
   test("legWindow: clean/contended/unknown from the final samples' own telemetry") {

@@ -38,19 +38,4 @@ class BenchTelemetrySpec extends AnyFunSuite {
     // no NaN/Infinity leakage (invalid JSON)
     assert(!j.contains("NaN") && !j.contains("Infinity"))
   }
-
-  test("previous-round medians parse from a BENCH_LAST.json queries object") {
-    val tmp = java.nio.file.Files.createTempFile("bench_last", ".json")
-    try {
-      java.nio.file.Files.write(tmp,
-        ("""{"metric":"total","value":9.9,"unit":"sec",""" +
-          """"queries":{"q_a":1.25,"q_b":0.033,"q_c":12.0},""" +
-          """"query_variance":{"q_c":{"min":10.0,"median":12.0,"max":14.0}}}""")
-          .getBytes("UTF-8"))
-      val m = Bench.previousMedians(tmp.toString)
-      assert(m == Map("q_a" -> 1.25, "q_b" -> 0.033, "q_c" -> 12.0))
-      // a missing file yields an EMPTY baseline, never a crash
-      assert(Bench.previousMedians("/nonexistent/bench.json").isEmpty)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
 }
