@@ -61,14 +61,7 @@ object WireIngestBench {
       .selectExpr("cast(value as string) as value")
     val declared = EngineSchema.structFor(IngestBench.fields)
     val (valid, _) = JsonIngest.ingest(raw, "value", declared)
-    // profiling knobs (never set by the driver): stop the pipeline early to
-    // attribute wall time to a stage — read-only / +validate+map / full
-    sys.env.get("SPARK_GRAFT_WIRE_STAGE") match {
-      case Some("read") => raw.write.format("noop").mode("overwrite").save()
-      case Some("map") => graft.sink.SinkMapper(sink.mappings)(valid)
-        .write.format("noop").mode("overwrite").save()
-      case _ => ClickHouseSink.writeBatch(sink)(valid)
-    }
+    ClickHouseSink.writeBatch(sink)(valid)
     n / ((System.nanoTime() - t0) / 1e9)
   }
 
@@ -111,9 +104,7 @@ object WireIngestBench {
         run(spark, brokers, "wire_bench", n, sink)
       }
       val delivered = ch.acceptedCount("default", "wire_bench")
-      require(sys.env.contains("SPARK_GRAFT_WIRE_STAGE") ||
-        delivered == passes * n,
-        s"delivered $delivered of ${passes * n} events")
+      require(delivered == passes * n, s"delivered $delivered of ${passes * n} events")
       println(f"""{"metric":"wire_ingest_throughput","value":${rates.max}%.0f,""" +
         s""""unit":"events_per_sec","n":$n,"partitions":$parts,""" +
         s""""delivered":$delivered,"format":"Native",""" +

@@ -268,11 +268,9 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
       val declared = topic.schemaFields.map(_.name).toSet
       val keep = Seq("timestamp", "partition", "offset")
         .filter(raw.columns.contains).filterNot(declared.contains)
-      val parsed = graft.sources.JsonIngest.parse(
+      val (good, bad) = graft.sources.JsonIngest.ingest(
         raw.withColumn("__payload", payload), "__payload", schema, keep)
-      val good = parsed.filter(!col("__corrupt")).drop("__corrupt", "__raw")
-      val bad = parsed.filter(col("__corrupt")).select(col("__raw"))
-      (good, if (dlqRoot.isDefined) Some(bad) else None)
+      (good, if (dlqRoot.isDefined) Some(bad.select(col("__raw"))) else None)
     }
   }
 
@@ -283,10 +281,9 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     val q = bad.writeStream
       .option("checkpointLocation", s"${checkpointOf(id)}_validation_dlq")
       .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty)
-          dlqFn(Dlq.envelope("ingestor",
-            "failed to validate data against the declared schema")(
-            b.withColumnRenamed("__raw", "raw")))
+        dlqFn(Dlq.envelope("ingestor",
+          "failed to validate data against the declared schema")(
+          b.withColumnRenamed("__raw", "raw")))
       }
       .start()
     registry.computeIfPresent(id, (_, dd) => dd.copy(sideQueries = dd.sideQueries :+ q))

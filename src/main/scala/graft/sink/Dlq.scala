@@ -58,15 +58,18 @@ object Dlq {
     * instead of re-sorting the whole queue per page. In-batch order is the
     * total column order (deterministic); appends to one DLQ path are
     * serialized through the owning query's foreachBatch, which is what
-    * makes the read-stamp-advance below safe. */
+    * makes the read-stamp-advance below safe. An empty frame appends
+    * nothing and leaves the side file as it is. */
   def writeParquet(path: String)(df: DataFrame): Unit = synchronized {
-    val start = readSeq(path)
     val n = df.count()
-    val w = Window.orderBy(df.columns.map(col): _*)
-    df.withColumn("seq", row_number().over(w).cast("long") + lit(start - 1))
-      .write.mode("append").parquet(path)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    java.nio.file.Files.write(seqPath(path), (start + n).toString.getBytes("UTF-8"))
+    if (n > 0) {
+      val start = readSeq(path)
+      val w = Window.orderBy(df.columns.map(col): _*)
+      df.withColumn("seq", row_number().over(w).cast("long") + lit(start - 1))
+        .write.mode("append").parquet(path)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+      java.nio.file.Files.write(seqPath(path), (start + n).toString.getBytes("UTF-8"))
+    }
   }
 
   /** One-time migration of an externally-written, seq-less DLQ directory:

@@ -10,10 +10,25 @@ import org.apache.spark.sql.types._
   *  - strip the Confluent Schema Registry wire-format prefix
   *    `[0x00][uint32 BE schema-id]` when present
   *    (internal/schema_v2/schema.go:180-190)
-  *  - parse JSON against the declared StructType — ONE parse per row total,
-  *    vs. the reference's parse-per-stage (a real win: SURVEY.md §4)
+  *  - parse JSON against the declared StructType: ONE `from_json` per row in
+  *    the valid-rows frame and ONE, over only the fields that can fail, in
+  *    the corrupt-rows frame ([[ingest]]) — vs. the reference's
+  *    parse-per-stage (SURVEY.md §4). A pipeline that runs both frames as
+  *    two streaming queries parses each event twice in all.
   *  - rows that fail schema validation split to the DLQ frame instead of
   *    failing the stream ("poison records never stop the pipeline")
+  *
+  * Each frame parses inside a `Generate` that emits zero or one row per
+  * payload: `explode(filter(array(from_json(..)), p -> test(p)))`. A parse
+  * in a projected alias followed by a `Filter` on the corrupt test is not
+  * enough: Catalyst inlines the alias into the pushed-down filter, so the
+  * filter and the projection above it each carry their own parse. Nor is a
+  * `Generate` followed by that `Filter`: constraint propagation then
+  * rewrites the filter's per-field predicate once per projected
+  * `__parsed.f AS f` alias, doubling the constraint set per field, and a
+  * 35-field schema never finishes planning its first micro-batch. With
+  * the test inside the generator, the parse runs once and there is no
+  * filter to push or to propagate.
   */
 object JsonIngest {
 
@@ -28,11 +43,24 @@ object JsonIngest {
     (payload, schemaId)
   }
 
-  /** Parse + validate a JSON string column against the declared schema.
-    * Output columns: the schema's fields, plus `__raw` (original payload)
-    * and `__corrupt` (true when the payload failed validation).
-    *
-    * Corrupt means: malformed JSON or a type-mismatched declared field
+  private val Parsed = "__parsed"
+  private val CorruptField = "__corrupt_rec"
+
+  /** The rows of `df` whose payload is corrupt (`corrupt = true`) or valid
+    * (`false`), plus the struct column `__parsed`: the payload parsed once,
+    * against `fields` and a corrupt-record column (PERMISSIVE). */
+  private def parsedWhere(df: DataFrame, jsonCol: String, fields: Seq[StructField],
+                          schema: StructType, corrupt: Boolean): DataFrame = {
+    val parseSchema = StructType(fields :+ StructField(CorruptField, StringType))
+    val parsed = from_json(col(jsonCol), parseSchema,
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptField))
+    df.select(col("*"), explode(filter(array(parsed), { p =>
+      val c = isCorrupt(col(jsonCol), p, fields.map(_.name), schema)
+      if (corrupt) c else !c
+    })).as(Parsed))
+  }
+
+  /** Corrupt means: malformed JSON or a type-mismatched declared field
     * (both land in from_json's corrupt-record column under PERMISSIVE —
     * the reference fails validation on any bad field type,
     * schema_v2/validate.go:186-196), or a syntactically valid object
@@ -40,36 +68,24 @@ object JsonIngest {
     * validation, validate.go:221). A record whose declared fields are
     * present but null is NOT corrupt — from_json cannot distinguish
     * explicit null from absent, so presence is checked via
-    * json_object_keys only on the rare all-null rows (the && short-circuits
-    * in codegen; the second parse never runs on the hot path).
+    * json_object_keys only when every field of `parsed` is null (the &&
+    * short-circuits; the second parse never runs on the hot path).
     *
-    * `keep` names source columns carried through UNCHANGED alongside the
-    * parsed fields — Kafka lineage/meta columns (timestamp, partition,
-    * offset) that downstream dedup windows and audit trails need; the
-    * reference's processor passes its message context the same way. */
-  def parse(df: DataFrame, jsonCol: String, schema: StructType,
-            keep: Seq[String] = Nil): DataFrame = {
-    val corruptField = "__corrupt_rec"
-    val parseSchema = StructType(schema.fields :+ StructField(corruptField, StringType))
-    val parsed = df.withColumn("__parsed",
-      from_json(col(jsonCol), parseSchema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corruptField)))
-    val allNull = schema.fieldNames
-      .map(f => col("__parsed").getField(f).isNull)
+    * `parsed` may hold only the declared fields that are not strings, and
+    * the answer is the same: Spark's JSON parser turns any JSON value into
+    * a string, so a string field never fails conversion, and a non-null
+    * string field's key is present, which the all-null rule checks by key
+    * anyway. */
+  private def isCorrupt(json: Column, parsed: Column, parsedFields: Seq[String],
+                        schema: StructType): Column = {
+    val allNull = parsedFields.map(f => parsed.getField(f).isNull)
       .reduceOption(_ && _).getOrElse(lit(true))
     // dotted names resolve literal-first then nested (mapper.go:100-118),
     // so either the literal key or its root segment counts as present
     val declaredKeys = schema.fieldNames.flatMap(f => Seq(f, f.split('.').head)).distinct.toSeq
-    val anyDeclaredKey = arrays_overlap(
-      json_object_keys(col(jsonCol)), array(declaredKeys.map(lit): _*))
-    parsed
-      .withColumn("__corrupt", col(jsonCol).isNotNull && (
-        col("__parsed").isNull ||
-          col("__parsed").getField(corruptField).isNotNull ||
-          (allNull && !coalesce(anyDeclaredKey, lit(false)))))
-      .withColumn("__raw", col(jsonCol))
-      .select(schema.fieldNames.map(f => col("__parsed").getField(f).as(f)) ++
-        keep.map(col) :+ col("__raw") :+ col("__corrupt"): _*)
+    val anyDeclaredKey = arrays_overlap(json_object_keys(json), array(declaredKeys.map(lit): _*))
+    json.isNotNull && (parsed.isNull || parsed.getField(CorruptField).isNotNull ||
+      (allNull && !coalesce(anyDeclaredKey, lit(false))))
   }
 
   /** Narrow a declared schema to the fields a pipeline actually references
@@ -83,12 +99,21 @@ object JsonIngest {
     StructType(schema.fields.filter(f => keep.contains(f.name)))
   }
 
-  /** Full ingest split: (valid rows with schema [+ kept] columns, DLQ
-    * rows — the raw payload plus any kept lineage columns). */
+  /** Parse + validate a JSON string column against the declared schema,
+    * split into (valid rows: the schema's fields plus the `keep` columns;
+    * corrupt rows: the raw payload as `__raw` plus the `keep` columns).
+    *
+    * `keep` names source columns carried through UNCHANGED alongside the
+    * parsed fields — Kafka lineage/meta columns (timestamp, partition,
+    * offset) that downstream dedup windows and audit trails need; the
+    * reference's processor passes its message context the same way. */
   def ingest(df: DataFrame, jsonCol: String, schema: StructType,
              keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val parsed = parse(df, jsonCol, schema, keep)
-    (parsed.filter(!col("__corrupt")).drop("__corrupt", "__raw"),
-      parsed.filter(col("__corrupt")).select(col("__raw") +: keep.map(col): _*))
+    val valid = parsedWhere(df, jsonCol, schema.fields, schema, corrupt = false)
+      .select(schema.fieldNames.map(f => col(Parsed).getField(f).as(f)) ++ keep.map(col): _*)
+    val checked = schema.fields.filterNot(_.dataType == StringType)
+    val corrupt = parsedWhere(df, jsonCol, checked, schema, corrupt = true)
+      .select(col(jsonCol).as("__raw") +: keep.map(col): _*)
+    (valid, corrupt)
   }
 }

@@ -287,6 +287,29 @@ class LifecycleSpec extends SparkSpec {
     }
   }
 
+  test("an empty dlq write appends nothing and leaves the seq file unchanged") {
+    val root = Files.createTempDirectory("graft_dlq_empty").toString
+    val empty = graft.sink.Dlq.envelope("ingestor", "bad")(
+      Seq(("r", 1L)).toDF("id", "n").filter(col("n") < 0))
+    graft.sink.Dlq.writeParquet(s"$root/fresh")(empty)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/fresh")))
+    graft.sink.Dlq.writeParquet(s"$root/dlq")(
+      graft.sink.Dlq.envelope("ingestor", "bad")(Seq(("r", 1L)).toDF("id", "n")))
+    def snapshot(): Seq[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Files.list(java.nio.file.Paths.get(s"$root/dlq")).iterator().asScala.toSeq
+        .map(f => (f.getFileName.toString, Files.size(f), Files.getLastModifiedTime(f).toMillis))
+        .sorted
+    }
+    val before = snapshot()
+    val seqFile = java.nio.file.Paths.get(s"$root/dlq/.graft_dlq_seq")
+    val seqBefore = new String(Files.readAllBytes(seqFile), "UTF-8")
+    Thread.sleep(50) // a rewrite would show in the modification times
+    graft.sink.Dlq.writeParquet(s"$root/dlq")(empty)
+    assert(snapshot() == before)
+    assert(new String(Files.readAllBytes(seqFile), "UTF-8") == seqBefore && seqBefore == "2")
+  }
+
   test("durable store: registry survives a service restart") {
     val dir = Files.createTempDirectory("graft_store").toString
     val svc1 = new PipelineService(spark, storeDir = Some(dir))
