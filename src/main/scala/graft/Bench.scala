@@ -212,7 +212,7 @@ object Bench {
       """"flagged_note":"*_flagged=true means the leg's median INCLUDES at least one sample the run-relative gates flagged that could not get its bounded re-run (budget) -- treat the number as contention-depressed, not measured clean; full detail in discarded_runs/skipped",""" +
       """"window_note":"*_window is the LEG's own weather, from the same run-relative gates applied to the final kept samples: clean = no final sample flagged; contended = a flagged sample is inside the median; unknown = no positive samples",""" +
       s""""env_note":"*_env=environment-blocked means the leg was cut short after 2 CONSECUTIVE fork failures (boot crash, fork timeout, or no output) -- the graded key is then -1 and ingest_<leg>_failures says why; every fork runs under a hard wall-clock cap (${ForkTimeoutSec}s), so one dead fork can no longer consume the budget",""" +
-      """"ingest_note":"each graded rate = MEDIAN over the leg's forked fresh-JVM runs with a positive rate; events_per_sec = steady-state batch rate with ALL 35 declared fields type-validated per record (reference validation semantics); pruned_schema = 12-of-35 mapped-field parse (narrower validation); streaming = same pipeline as a Structured Streaming micro-batch query (rate-micro-batch source, fixed 2M rows/batch, median steady-state per-batch rate, 2 warm-up batches dropped); wire = BASELINE.md's actual topology (kafka wire protocol over loopback -> 35-field validate -> typed map -> ClickHouse HTTP FORMAT Native INSERT into a type-validating fixture server, server CPU included; each fork = one warm-up pass + one measured pass); every forked run is preceded by a MemAvailable quiesce guard and a CPU-calm gate and bracketed by host telemetry (see host_telemetry)",""" +
+      """"ingest_note":"each graded rate = MEDIAN over the leg's forked fresh-JVM runs with a positive rate; events_per_sec = steady-state batch rate with ALL 35 declared fields type-validated per record (reference validation semantics); pruned_schema = parse of the 8 non-string and the mapped string fields (same validation); streaming = same pipeline as a Structured Streaming micro-batch query (rate-micro-batch source, fixed 2M rows/batch, median steady-state per-batch rate, 2 warm-up batches dropped); wire = BASELINE.md's actual topology (kafka wire protocol over loopback -> 35-field validate -> typed map -> ClickHouse HTTP FORMAT Native INSERT into a type-validating fixture server, server CPU included; each fork = one warm-up pass + one measured pass); every forked run is preceded by a MemAvailable quiesce guard and a CPU-calm gate and bracketed by host telemetry (see host_telemetry)",""" +
       f""""ingest_events_per_sec":${legRate(legs, "batch")}%.0f,""" +
       f""""ingest_pruned_schema_events_per_sec":${legRate(legs, "batch", "pruned_schema_events_per_sec")}%.0f,""" +
       f""""ingest_streaming_events_per_sec":${legRate(legs, "streaming")}%.0f,""" +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.exprs.ExprCompiler
 import graft.operators.{AsOfJoin, DedupOp, FilterOp, TemporalJoin, TransformOp}
 import graft.sink.SinkMapper
 
@@ -33,11 +34,9 @@ object PipelineCompiler {
       // the scan is the single biggest win)
       val pruned = cfg.transform match {
         case Some(tr) if t.deduplication.exists(d => d.enabled && d.timeField.isDefined) =>
-          val needed = tr.rules
-            .flatMap(r => graft.exprs.ExprCompiler.referencedFields(r.expression, filtered.schema))
-            .toSet ++
+          val needed = fieldsRead(filtered.schema, tr.rules.map(_.expression),
             t.deduplication.toSeq.flatMap(d => d.timeField.toSeq :+ d.idField) ++
-            cfg.join.toSeq.flatMap(_.sources.flatMap(s => s.timeField.toSeq :+ s.joinKey))
+              cfg.join.toSeq.flatMap(_.sources.flatMap(s => s.timeField.toSeq :+ s.joinKey)))
           filtered.select(filtered.columns.filter(needed).map(col): _*)
         case _ => filtered
       }
@@ -75,6 +74,46 @@ object PipelineCompiler {
     cfg.sink.filter(_.tableMapping.nonEmpty).fold(joined) { s =>
       SinkMapper(s.tableMapping.map(m =>
         SinkMapper.ColumnMapping(m.fieldName, m.columnName, m.columnType)))(joined)
+    }
+  }
+
+  /** The top-level fields of `schema` that `exprs` (expr-lang sources) and
+    * `names` (field names, possibly dotted) read. A dotted name reads its
+    * literal column when `schema` has one, else its root segment — the
+    * resolution `ExprCompiler.resolve` applies. An expression that does not
+    * parse reads nothing: the stage that compiles it fails or is skipped. */
+  def fieldsRead(schema: StructType, exprs: Seq[String], names: Seq[String]): Set[String] =
+    exprs.flatMap(e =>
+      try ExprCompiler.referencedFields(e, schema) catch { case _: Exception => Set.empty[String] }
+    ).toSet ++ names.map(n => if (schema.fieldNames.contains(n)) n else n.split('.').head)
+
+  /** The declared fields of `topic` (typed as `schema`) that a
+    * config-started pipeline reads after ingest: the filter's refs, the
+    * dedup id and time fields, then the transform's refs or, with no
+    * transform, the sink mapping's source fields. A join side reads its
+    * join key, time field and projected fields instead (the streaming join
+    * applies no transform). None when every column can reach the sink: no
+    * transform and no mapping, or a join side with no projections. */
+  def ingestReads(cfg: PipelineConfig, topic: TopicConfig, schema: StructType): Option[Set[String]] = {
+    val filter = cfg.filter.toSeq.map(_.expression)
+    // an undeclared dedup time field defaults to the `timestamp` column
+    // (dedupTimeField), which may be a declared field
+    val dedup = topic.deduplication.filter(_.enabled).toSeq
+      .flatMap(d => Seq(d.idField, d.timeField.getOrElse("timestamp")))
+    val downstream: Option[(Seq[String], Seq[String])] = cfg.join.filter(_.enabled) match {
+      case Some(j) =>
+        val projected = j.projections.filter(_.sourceId == topic.name).map(_.field)
+        if (projected.isEmpty) None
+        else Some((Nil, j.sources.filter(_.sourceId == topic.name)
+          .flatMap(s => s.joinKey +: s.timeField.toSeq) ++ projected))
+      case None => cfg.transform match {
+        case Some(tr) => Some((tr.rules.map(_.expression), Nil))
+        case None => cfg.sink.map(_.tableMapping.map(_.fieldName)).filter(_.nonEmpty)
+          .map(fields => (Nil, fields))
+      }
+    }
+    downstream.map { case (exprs, names) =>
+      fieldsRead(schema, filter ++ exprs, dedup ++ names).intersect(schema.fieldNames.toSet)
     }
   }
 
@@ -125,7 +164,7 @@ object PipelineCompiler {
       val df0 = sources.getOrElse(id,
         throw new IllegalArgumentException(s"no source DataFrame for $id"))
       val filtered = cfg.filter
-        .filter(f => graft.exprs.ExprCompiler.validate(f.expression, df0.schema).isRight)
+        .filter(f => ExprCompiler.validate(f.expression, df0.schema).isRight)
         .fold(df0)(f => FilterOp(f.expression)(df0))
       cfg.source.topics.find(_.name == id).flatMap(_.deduplication)
         .filter(_.enabled).fold(filtered) { d =>

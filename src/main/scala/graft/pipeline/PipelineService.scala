@@ -203,7 +203,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
           else Right(())
         schemaCheck.flatMap(_ => sourceE).flatMap { src0 =>
           val (source, badOpt) =
-            if (kind == "kafka") parseIfRaw(src0, topic) else (src0, None)
+            if (kind == "kafka") parseIfRaw(src0, topic, cfg) else (src0, None)
           start(id, source,
             df => sinkAttach(df, chCfg, checkpointOf(id), dlqOf(id)).start())
             .map { ok =>
@@ -250,8 +250,12 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     * — field-level filters/transforms compiled downstream require parsed
     * columns either way; without this, a real-cluster config start would
     * hand binary frames to the compiler and fail on the first field
-    * reference. */
-  private[pipeline] def parseIfRaw(raw: DataFrame, topic: TopicConfig):
+    * reference.
+    *
+    * The valid rows carry only the declared fields `cfg` reads
+    * ([[PipelineCompiler.ingestReads]]), so only those string fields are
+    * parsed; every non-string field is still parsed and validated. */
+  private[pipeline] def parseIfRaw(raw: DataFrame, topic: TopicConfig, cfg: PipelineConfig):
       (DataFrame, Option[DataFrame]) = {
     import org.apache.spark.sql.functions.col
     val isRawFrame = topic.schemaFields.nonEmpty &&
@@ -268,8 +272,8 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
       val declared = topic.schemaFields.map(_.name).toSet
       val keep = Seq("timestamp", "partition", "offset")
         .filter(raw.columns.contains).filterNot(declared.contains)
-      val (good, bad) = graft.sources.JsonIngest.ingest(
-        raw.withColumn("__payload", payload), "__payload", schema, keep)
+      val (good, bad) = graft.sources.JsonIngest.ingest(raw.withColumn("__payload", payload),
+        "__payload", schema, keep, PipelineCompiler.ingestReads(cfg, topic, schema))
       (good, if (dlqRoot.isDefined) Some(bad.select(col("__raw"))) else None)
     }
   }
@@ -323,7 +327,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
                 brokers = cfg.source.brokers.get,
                 topic = t.name,
                 consumerGroup = t.consumerGroup.getOrElse(s"graft-$id")))
-              val (good, bad) = parseIfRaw(raw, t)
+              val (good, bad) = parseIfRaw(raw, t, cfg)
               ((sid, good), bad)
             }
             val sources = built.map(_._1).toMap

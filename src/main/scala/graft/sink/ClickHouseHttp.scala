@@ -4,7 +4,10 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 
 import graft.types.{CHType, RowBinaryEncoder}
 
@@ -25,6 +28,12 @@ import graft.types.{CHType, RowBinaryEncoder}
   * driver. A task failure rethrows the server's own error code, which
   * reaches [[ClickHouseSink.foreachBatchHandler]] wrapped in Spark's task
   * exception — exactly the chain the classifier's cause-walk handles.
+  *
+  * JSONEachRow slabs are built from Spark's internal rows: each task
+  * appends the UTF-8 bytes of `to_json(struct(..))` and a '\n' straight to
+  * its slab and records where each row ends. A slab the server rejects
+  * replays row by row from those byte ranges, and a row's text is decoded
+  * only when the server rejects it on its own.
   */
 object ClickHouseHttp {
 
@@ -210,25 +219,58 @@ object ClickHouseHttp {
     to_json(struct(verbatimCols(df): _*), jsonOpts)
   }
 
-  /** Encode the mapped frame as one byte payload PER ROW in the configured
-    * wire format — the unit both the slab path (concatenate) and the
-    * poison-isolation path (re-post singly) work in.
-    *  - JSONEachRow: Spark's JSON encoder + '\n'. Null fields are OMITTED;
-    *    ClickHouse fills omitted fields with column defaults
-    *    (input_format_defaults_for_omitted_fields, on by default) — the
-    *    same absent→NULL/default contract the reference mapper implements.
-    *  - RowBinary: column-order binary via [[RowBinaryEncoder]], driven by
-    *    [[Config.columnTypes]] — roughly half the wire bytes and no
-    *    server-side text parsing. */
-  private def rowBytes(c: Config, df: DataFrame): org.apache.spark.sql.Dataset[Array[Byte]] = {
-    import org.apache.spark.sql.Encoders
-    c.format match {
-      case "RowBinary" =>
-        val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-        df.map(row => RowBinaryEncoder.encode(row, types))(Encoders.BINARY)
-      case _ =>
-        df.select(jsonCol(df)).as[String](Encoders.STRING)
-          .map(s => (s + "\n").getBytes(UTF_8))(Encoders.BINARY)
+  /** One failed row of an isolating write: (the row as JSON, why it was
+    * dead-lettered). Every leg builds its failure set with this one
+    * explicit encoder, so no batch derives one by reflection. */
+  val FailurePair: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+
+  /** One task's INSERT slab: encoded rows back to back, plus where each row
+    * ends, so a rejected slab replays row by row from its own bytes. A row
+    * is written to `out` and closed with [[endRow]], which says when the
+    * slab is full: at maxRowsPerPost rows or maxBytesPerPost bytes,
+    * whichever trips first. */
+  private final class Slab(conf: Config, query: String) {
+    private object body extends java.io.ByteArrayOutputStream(1 << 20) {
+      def bytes: Array[Byte] = buf
+    }
+    private var ends = new Array[Int](1024)
+    private var rows = 0
+    val out: java.io.OutputStream = body
+
+    def endRow(): Boolean = {
+      if (rows == ends.length) ends = java.util.Arrays.copyOf(ends, rows * 2)
+      ends(rows) = body.size
+      rows += 1
+      rows >= conf.maxRowsPerPost || body.size >= conf.maxBytesPerPost
+    }
+
+    private def start(i: Int): Int = if (i == 0) 0 else ends(i - 1)
+
+    /** Row `i` of a JSONEachRow slab, decoded, without its '\n'. */
+    def text(i: Int): String = new String(body.bytes, start(i), ends(i) - start(i) - 1, UTF_8)
+
+    /** POST the slab and empty it. With `rejected`, a slab the server turns
+      * down with a ROW-DATA fault (see [[ErrorClassifier.rowDataFaultCodes]])
+      * is re-posted row by row, and each row the server turns down again
+      * goes to `rejected(row index, error)`. Any other fault rethrows, so
+      * the batch handler's classify/retry policy governs it —
+      * dead-lettering good rows on a dropped table or rotated credential
+      * would be unrecoverable. */
+    def flush(rejected: Option[(Int, String) => Unit]): Unit = if (rows > 0) {
+      try post(conf, query, body.toByteArray)
+      catch {
+        case CHServerException(code, _)
+            if rejected.isDefined && ErrorClassifier.isRowDataFault(code) =>
+          for (i <- 0 until rows) {
+            try post(conf, query, java.util.Arrays.copyOfRange(body.bytes, start(i), ends(i)))
+            catch {
+              case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
+                rejected.get(i, s"Code: $code. DB::Exception: $msg")
+            }
+          }
+      }
+      body.reset()
+      rows = 0
     }
   }
 
@@ -236,27 +278,11 @@ object ClickHouseHttp {
     * columns, target names) — encode per the configured format and POST
     * per partition, slabbed at maxRowsPerPost rows / maxBytesPerPost
     * bytes, whichever trips first. */
-  def write(c: Config)(df: DataFrame): Unit =
-    if (c.format == "Native") writeNativeBlocks(c)(df) else writeRowSlabs(c)(df)
-
-  private def writeRowSlabs(c: Config)(df: DataFrame): Unit = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    rowBytes(c, df).foreachPartition { (it: Iterator[Array[Byte]]) =>
-      val buf = new java.io.ByteArrayOutputStream(1 << 20)
-      var n = 0
-      def flush(): Unit = if (n > 0) {
-        post(conf, query, buf.toByteArray)
-        buf.reset(); n = 0
-      }
-      while (it.hasNext) {
-        val b = it.next()
-        buf.write(b, 0, b.length)
-        n += 1
-        if (n >= conf.maxRowsPerPost || buf.size >= conf.maxBytesPerPost) flush()
-      }
-      flush()
-    }
+  def write(c: Config)(df: DataFrame): Unit = c.format match {
+    case "Native" => writeNativeBlocks(c)(df)
+    case "RowBinary" => writeRowBinarySlabs(c)(df)
+    // the slabs are POSTed as each partition is computed
+    case _ => jsonSlabs(c, df, isolate = false).foreachPartition(_ => ())
   }
 
   /** Insert with poison-row isolation — the reference's append-error path
@@ -284,54 +310,84 @@ object ClickHouseHttp {
     * persist it first, or slabs will re-POST (at-least-once).
     * [[ClickHouseSink.writeBatchHttp]] does persist + count + distributed
     * DLQ write, returning only counts to the driver. */
-  def writeIsolating(c: Config)(df: DataFrame): org.apache.spark.sql.Dataset[(String, String)] =
-    if (c.format == "Native") writeIsolatingNative(c)(df) else writeIsolatingRows(c)(df)
+  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] = c.format match {
+    case "Native" => writeIsolatingNative(c)(df)
+    case "RowBinary" => writeIsolatingRowBinary(c)(df)
+    case _ => df.sparkSession.createDataset(jsonSlabs(c, df, isolate = true))(FailurePair)
+  }
 
-  private def writeIsolatingRows(c: Config)(df: DataFrame): org.apache.spark.sql.Dataset[(String, String)] = {
+  /** The JSONEachRow legs, plain and isolating. Each task walks the
+    * internal rows of `to_json(struct(..))` and appends each row's UTF-8
+    * bytes and a '\n' to its slab: no String, no per-row array and no
+    * Dataset encoder between the JSON encoder and the POST body. A row's
+    * text is decoded only when the server rejects it (`isolate`); without
+    * `isolate` a rejected slab rethrows. Null fields are OMITTED, and
+    * ClickHouse fills omitted fields with column defaults
+    * (input_format_defaults_for_omitted_fields, on by default) — the same
+    * absent→NULL/default contract the reference mapper implements. Runs
+    * when the returned RDD is computed; yields the failed rows. */
+  private def jsonSlabs(c: Config, df: DataFrame, isolate: Boolean): RDD[(String, String)] = {
     val query = insertQuery(c, df.columns.toSeq)
     val conf = c
-    val spark = df.sparkSession
-    import spark.implicits._
-    rowBytesWithRepr(c, df).mapPartitions { it =>
-      val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      val chunk = scala.collection.mutable.ArrayBuffer[(String, Array[Byte])]()
-      var chunkBytes = 0L
-      // row-data faults only: a table/auth/query-level fault mid-replay
-      // must RETHROW so the batch handler's classify/retry policy governs
-      // it — dead-lettering good rows on a dropped table or rotated
-      // credential would be unrecoverable
-      def replayRowwise(): Unit = chunk.foreach { case (repr, b) =>
-        try post(conf, query, b)
-        catch {
-          case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
-            failed += ((repr, s"Code: $code. DB::Exception: $msg"))
-        }
-      }
-      def flush(): Unit = if (chunk.nonEmpty) {
-        val body = new java.io.ByteArrayOutputStream(1 << 20)
-        chunk.foreach { case (_, b) => body.write(b, 0, b.length) }
-        try post(conf, query, body.toByteArray)
-        catch {
-          case CHServerException(code, _) if ErrorClassifier.isRowDataFault(code) =>
-            replayRowwise()
-        }
-        chunk.clear(); chunkBytes = 0
-      }
+    df.select(jsonCol(df)).queryExecution.toRdd.mapPartitions { it =>
+      val slab = new Slab(conf, query)
+      val failed = ArrayBuffer[(String, String)]()
+      val rejected =
+        if (isolate) Some((i: Int, err: String) => { failed += ((slab.text(i), err)); () })
+        else None
       while (it.hasNext) {
-        it.next() match {
-          // client-side encode failure (RowBinary FixedString overflow,
-          // unknown enum value): that row is poison by construction —
-          // dead-letter it alone, the rest of the slab proceeds
-          case (repr, null, err) => failed += ((repr, err))
-          case (repr, bytes, _) =>
-            chunk += ((repr, bytes)); chunkBytes += bytes.length
-            if (chunk.size >= conf.maxRowsPerPost ||
-              chunkBytes >= conf.maxBytesPerPost) flush()
-        }
+        it.next().getUTF8String(0).writeTo(slab.out)
+        slab.out.write('\n')
+        if (slab.endRow()) slab.flush(rejected)
+      }
+      slab.flush(rejected)
+      failed.iterator
+    }
+  }
+
+  /** RowBinary: column-order binary via [[RowBinaryEncoder]], driven by
+    * [[Config.columnTypes]] — roughly half the wire bytes and no
+    * server-side text parsing. */
+  private def rowBytes(c: Config, df: DataFrame): Dataset[Array[Byte]] = {
+    val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
+    df.map(row => RowBinaryEncoder.encode(row, types))(Encoders.BINARY)
+  }
+
+  private def writeRowBinarySlabs(c: Config)(df: DataFrame): Unit = {
+    val query = insertQuery(c, df.columns.toSeq)
+    val conf = c
+    rowBytes(c, df).foreachPartition { (it: Iterator[Array[Byte]]) =>
+      val slab = new Slab(conf, query)
+      it.foreach { b =>
+        slab.out.write(b)
+        if (slab.endRow()) slab.flush(None)
+      }
+      slab.flush(None)
+    }
+  }
+
+  private def writeIsolatingRowBinary(c: Config)(df: DataFrame): Dataset[(String, String)] = {
+    val query = insertQuery(c, df.columns.toSeq)
+    val conf = c
+    rowBytesWithRepr(c, df).mapPartitions { it =>
+      val slab = new Slab(conf, query)
+      val reprs = ArrayBuffer[String]()
+      val failed = ArrayBuffer[(String, String)]()
+      val rejected = Some((i: Int, err: String) => { failed += ((reprs(i), err)); () })
+      def flush(): Unit = { slab.flush(rejected); reprs.clear() }
+      it.foreach {
+        // client-side encode failure (FixedString overflow, unknown enum
+        // value): that row is poison by construction — dead-letter it
+        // alone, the rest of the slab proceeds
+        case (repr, null, err) => failed += ((repr, err))
+        case (repr, bytes, _) =>
+          slab.out.write(bytes)
+          reprs += repr
+          if (slab.endRow()) flush()
       }
       flush()
       failed.iterator
-    }
+    }(FailurePair)
   }
 
   /** Native-format write leg: COLUMNAR blocks per partition — one type
@@ -366,15 +422,12 @@ object ClickHouseHttp {
     * row-atomic across columns); a server row-data fault replays the
     * block's rows as single-row blocks, exactly the row-oriented legs'
     * replay shape. Distributed + lazy like [[writeIsolating]]. */
-  private def writeIsolatingNative(c: Config)(df: DataFrame):
-      org.apache.spark.sql.Dataset[(String, String)] = {
+  private def writeIsolatingNative(c: Config)(df: DataFrame): Dataset[(String, String)] = {
     val names = df.columns.toSeq
     val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
     val query = insertQuery(c, names)
     val conf = c
-    val spark = df.sparkSession
     import org.apache.spark.sql.functions.struct
-    import spark.implicits._
     df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
       .mapPartitions { it =>
         val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -412,34 +465,24 @@ object ClickHouseHttp {
         }
         flush()
         failed.iterator
-      }
+      }(FailurePair)
   }
 
-  /** Isolation-path encoding: (jsonRepr, bytesOrNull, encodeErrOrNull) per
-    * row. The JSON repr rides along so a dead-lettered row's
+  /** RowBinary isolation-path encoding: (jsonRepr, bytesOrNull,
+    * encodeErrOrNull) per row. The JSON repr rides along so a dead-lettered row's
     * original_message is always readable — binary rows included — and so a
     * row the ENCODER rejects still reaches the DLQ with its content. */
-  private def rowBytesWithRepr(c: Config, df: DataFrame):
-      org.apache.spark.sql.Dataset[(String, Array[Byte], String)] = {
-    import org.apache.spark.sql.Encoders
+  private def rowBytesWithRepr(c: Config, df: DataFrame): Dataset[(String, Array[Byte], String)] = {
     import org.apache.spark.sql.functions.struct
-    implicit val enc = Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.STRING)
-    c.format match {
-      case "RowBinary" =>
-        val types = df.columns.toSeq.map(n =>
-          CHType.parse(c.columnTypes.getOrElse(n, "String")))
-        df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
-          .map { row =>
-            val j = row.getString(0)
-            try (j, RowBinaryEncoder.encode(row.getStruct(1), types), null: String)
-            catch { case e: Exception =>
-              (j, null: Array[Byte], Option(e.getMessage).getOrElse(e.toString))
-            }
-          }
-      case _ =>
-        df.select(jsonCol(df)).as[String](Encoders.STRING)
-          .map(s => (s, (s + "\n").getBytes(UTF_8), null: String))
-    }
+    val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
+    df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
+      .map { row =>
+        val j = row.getString(0)
+        try (j, RowBinaryEncoder.encode(row.getStruct(1), types), null: String)
+        catch { case e: Exception =>
+          (j, null: Array[Byte], Option(e.getMessage).getOrElse(e.toString))
+        }
+      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.STRING))
   }
 
   /** Introspect the target table's schema — `DESCRIBE TABLE db.t FORMAT

@@ -217,12 +217,13 @@ object ClickHouseSink {
     * clickhouse.go:616-648).
     *
     * The failure set NEVER funnels through the driver: it is persisted
-    * executor-side (MEMORY_AND_DISK — an all-poison 100M-row batch spills
-    * instead of OOMing), counted (this is the action that runs the
-    * INSERTs, exactly once), and handed to `dlq` as a distributed frame —
-    * only the count returns to the driver. Mirrors the reference's
-    * worker-side DLQ publish (dlq_processor.go:35-69). Returns the number
-    * of dead-lettered rows. */
+    * executor-side as an RDD (MEMORY_AND_DISK — an all-poison 100M-row
+    * batch spills instead of OOMing; an RDD, so no batch registers a plan
+    * with the session's cache manager), counted (this is the action that
+    * runs the INSERTs, exactly once), and, only when the count is above
+    * 0, handed to `dlq` as a distributed frame — only the count returns to
+    * the driver. Mirrors the reference's worker-side DLQ publish
+    * (dlq_processor.go:35-69). Returns the number of dead-lettered rows. */
   private[sink] def writeBatchHttp(c: Config, dlq: DataFrame => Unit)(df: DataFrame): Long = {
     val isolating: DataFrame => org.apache.spark.sql.Dataset[(String, String)] =
       if (c.url.startsWith("tcp://") || c.url.startsWith("tcps://"))
@@ -231,10 +232,12 @@ object ClickHouseSink {
     val failed = batchSlices(c)(df)
       .map(isolating)
       .reduce(_ union _)
+      .rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = failed.count()
-      if (n > 0) dlq(Dlq.envelopePairs("sink", failed))
+      if (n > 0) dlq(Dlq.envelopePairs("sink",
+        df.sparkSession.createDataset(failed)(ClickHouseHttp.FailurePair)))
       n
     } finally { failed.unpersist(); () }
   }
@@ -245,6 +248,13 @@ object ClickHouseSink {
     * MaxDeliver=10 dead-letter semantics, constants.go:157-166,
     * clickhouse.go:511-534 — a persistently sick batch must not wedge the
     * stream); permanent / unknown → DLQ immediately, stream continues.
+    *
+    * A whole-batch dead-letter envelopes the batch as this handler received
+    * it. For a raw-Kafka config start with no transform and no join, that
+    * batch holds only the declared fields the pipeline reads plus the
+    * Kafka lineage columns, not every declared field (`JsonIngest.ingest`'s
+    * `read`); the per-row sink DLQ ([[writeBatchHttp]]) and the ingestor
+    * DLQ are unaffected.
     *
     * With `budgetDir` set (as [[attach]] does: a directory inside the
     * checkpoint), attempt counts are DURABLE: the reference's NATS tracks

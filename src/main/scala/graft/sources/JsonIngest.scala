@@ -10,13 +10,26 @@ import org.apache.spark.sql.types._
   *  - strip the Confluent Schema Registry wire-format prefix
   *    `[0x00][uint32 BE schema-id]` when present
   *    (internal/schema_v2/schema.go:180-190)
-  *  - parse JSON against the declared StructType: ONE `from_json` per row in
-  *    the valid-rows frame and ONE, over only the fields that can fail, in
-  *    the corrupt-rows frame ([[ingest]]) — vs. the reference's
-  *    parse-per-stage (SURVEY.md §4). A pipeline that runs both frames as
-  *    two streaming queries parses each event twice in all.
+  *  - parse JSON against the declared StructType, ONE `from_json` per row
+  *    per frame ([[ingest]]), vs. the reference's parse-per-stage
+  *    (SURVEY.md §4):
+  *    - the valid-rows frame parses every declared field that is not a
+  *      string, which validation needs, plus the string fields the caller
+  *      reads (`read`; every field when `read` is None), and returns only
+  *      the fields it reads;
+  *    - the corrupt-rows frame parses only the fields that can fail: the
+  *      declared fields that are not strings.
+  *    Either parse set gives the same valid/corrupt split as parsing every
+  *    declared field (see `isCorrupt`). A pipeline that runs both frames
+  *    as two streaming queries parses each event twice in all.
   *  - rows that fail schema validation split to the DLQ frame instead of
   *    failing the stream ("poison records never stop the pipeline")
+  *
+  * The parse is strict where Spark's JSON reader is lenient by default:
+  * single-quoted strings and bare `NaN`/`Infinity` (or those words quoted,
+  * for a numeric field) are corrupt. One gap stays: the parser stops after
+  * the first JSON value, so trailing data (`{"i":1}{"i":2}`,
+  * `{"i":1} trailing`) is accepted as the first object.
   *
   * Each frame parses inside a `Generate` that emits zero or one row per
   * payload: `explode(filter(array(from_json(..)), p -> test(p)))`. A parse
@@ -28,7 +41,9 @@ import org.apache.spark.sql.types._
   * `__parsed.f AS f` alias, doubling the constraint set per field, and a
   * 35-field schema never finishes planning its first micro-batch. With
   * the test inside the generator, the parse runs once and there is no
-  * filter to push or to propagate.
+  * filter to push or to propagate. Catalyst cannot narrow that parse
+  * either (the test reads every parsed field), so the parse schema itself
+  * is what decides how many fields are materialized per event.
   */
 object JsonIngest {
 
@@ -52,8 +67,9 @@ object JsonIngest {
   private def parsedWhere(df: DataFrame, jsonCol: String, fields: Seq[StructField],
                           schema: StructType, corrupt: Boolean): DataFrame = {
     val parseSchema = StructType(fields :+ StructField(CorruptField, StringType))
-    val parsed = from_json(col(jsonCol), parseSchema,
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptField))
+    val parsed = from_json(col(jsonCol), parseSchema, Map("mode" -> "PERMISSIVE",
+      "columnNameOfCorruptRecord" -> CorruptField,
+      "allowSingleQuotes" -> "false", "allowNonNumericNumbers" -> "false"))
     df.select(col("*"), explode(filter(array(parsed), { p =>
       val c = isCorrupt(col(jsonCol), p, fields.map(_.name), schema)
       if (corrupt) c else !c
@@ -71,11 +87,11 @@ object JsonIngest {
     * json_object_keys only when every field of `parsed` is null (the &&
     * short-circuits; the second parse never runs on the hot path).
     *
-    * `parsed` may hold only the declared fields that are not strings, and
-    * the answer is the same: Spark's JSON parser turns any JSON value into
-    * a string, so a string field never fails conversion, and a non-null
-    * string field's key is present, which the all-null rule checks by key
-    * anyway. */
+    * `parsed` may hold any subset of the declared fields that includes
+    * every field that is not a string, and the answer is the same: Spark's
+    * JSON parser turns any JSON value into a string, so a string field
+    * never fails conversion, and a non-null string field's key is present,
+    * which the all-null rule checks by key anyway. */
   private def isCorrupt(json: Column, parsed: Column, parsedFields: Seq[String],
                         schema: StructType): Column = {
     val allNull = parsedFields.map(f => parsed.getField(f).isNull)
@@ -88,31 +104,26 @@ object JsonIngest {
       (allNull && !coalesce(anyDeclaredKey, lit(false))))
   }
 
-  /** Narrow a declared schema to the fields a pipeline actually references
-    * (sink mappings + expressions). from_json's cost is dominated by value
-    * materialization per declared field: parsing 12 of 35 fields of a
-    * 1.5 KB record is the single biggest ingest-throughput lever, and the
-    * JSON schema pruning the optimizer does cannot help unless the
-    * StructType itself is narrowed. */
-  def pruneSchema(schema: StructType, needed: Seq[String]): StructType = {
-    val keep = needed.flatMap(f => Seq(f, f.split('.').head)).toSet
-    StructType(schema.fields.filter(f => keep.contains(f.name)))
-  }
-
   /** Parse + validate a JSON string column against the declared schema,
-    * split into (valid rows: the schema's fields plus the `keep` columns;
-    * corrupt rows: the raw payload as `__raw` plus the `keep` columns).
+    * split into (valid rows: the schema's fields that `read` names, every
+    * field when it is None, plus the `keep` columns; corrupt rows: the raw
+    * payload as `__raw` plus the `keep` columns). `read` only narrows what
+    * is parsed and returned: every non-string field is still validated.
     *
     * `keep` names source columns carried through UNCHANGED alongside the
     * parsed fields — Kafka lineage/meta columns (timestamp, partition,
     * offset) that downstream dedup windows and audit trails need; the
     * reference's processor passes its message context the same way. */
   def ingest(df: DataFrame, jsonCol: String, schema: StructType,
-             keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val valid = parsedWhere(df, jsonCol, schema.fields, schema, corrupt = false)
-      .select(schema.fieldNames.map(f => col(Parsed).getField(f).as(f)) ++ keep.map(col): _*)
-    val checked = schema.fields.filterNot(_.dataType == StringType)
-    val corrupt = parsedWhere(df, jsonCol, checked, schema, corrupt = true)
+             keep: Seq[String] = Nil, read: Option[Set[String]] = None): (DataFrame, DataFrame) = {
+    def reads(f: StructField): Boolean = read.forall(_.contains(f.name))
+    // only a field that is not a string can fail conversion (isCorrupt)
+    def canFail(f: StructField): Boolean = f.dataType != StringType
+    val valid = parsedWhere(df, jsonCol, schema.fields.filter(f => canFail(f) || reads(f)),
+        schema, corrupt = false)
+      .select(schema.fields.filter(reads).map(f => col(Parsed).getField(f.name).as(f.name)) ++
+        keep.map(col): _*)
+    val corrupt = parsedWhere(df, jsonCol, schema.fields.filter(canFail), schema, corrupt = true)
       .select(col(jsonCol).as("__raw") +: keep.map(col): _*)
     (valid, corrupt)
   }

@@ -4,11 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.sink.SinkMapper
+import graft.sink.{ClickHouseSink, SinkMapper}
 import graft.sources.JsonIngest
 
 /** The raw-Kafka config start parses each event once per query: the
@@ -23,6 +24,16 @@ class IngestParseSpec extends SparkSpec {
     FieldDef("b", "bool"), FieldDef("a", "array"), FieldDef("m", "map"),
     FieldDef("k.pod", "string")))
 
+  /** perfbench's `ingest_drain` config: the 35-field telemetry topic and
+    * its 12-column mapping, nothing else. */
+  private val telemetry: PipelineConfig = PipelineConfig("telemetry",
+    SourceConfig(kind = Some("kafka"), brokers = Some(Seq("broker:9092")),
+      topics = Seq(TopicConfig("telemetry",
+        schemaFields = graft.IngestBench.fields.map { case (n, t) => FieldDef(n, t) }))),
+    sink = Some(SinkConfig(table = "telemetry", url = Some("jdbc:ch://ch:8123/default"),
+      tableMapping = graft.IngestBench.mappings.map(m =>
+        SinkMapping(fieldName = m.sourceField, columnName = m.column, columnType = m.chType)))))
+
   private def framed(json: String): Array[Byte] =
     Array[Byte](0, 0, 0, 0, 7) ++ json.getBytes("UTF-8")
 
@@ -33,6 +44,12 @@ class IngestParseSpec extends SparkSpec {
     // malformed and truncated
     "not json", """{"s":"x"""", """{"s":"x","i":1""", """{"i":""", "}", """{"s":"a",}""",
     """{"s":'single'}""", "   ",
+    // lenient-JSON forms the strict options reject: single quotes and bare
+    // NaN/Infinity in string and non-string fields, plus the accepted gap
+    // of trailing data after the first value
+    """{'s':"key"}""", """{"i":'1'}""", """{"i":1,"zzz":'q'}""", """{"f":NaN}""",
+    """{"f":Infinity}""", """{"f":-Infinity}""", """{"f":"Infinity"}""", """{"s":NaN}""",
+    """{"s":Infinity}""", """{"zzz":NaN,"i":1}""", """{"i":1}{"i":2}""",
     // top-level arrays and scalars, empty, JSON null
     "[1,2]", """[{"s":"x","i":1}]""", "[]", "42", "\"str\"", "true", "null", "",
     // a type mismatch on each non-string type
@@ -74,16 +91,24 @@ class IngestParseSpec extends SparkSpec {
     spark.read.parquet(dir)
   }
 
+  /** A config that reads nothing after ingest but the frame itself: no
+    * sink mapping and no transform, so every declared field is parsed. */
+  private def bare(t: TopicConfig*): PipelineConfig =
+    PipelineConfig("p", SourceConfig(topics = t))
+
   private def configStart: (DataFrame, DataFrame) = {
     val root = Files.createTempDirectory("graft_ingest_parse_dlq").toString
-    val (good, bad) = new PipelineService(spark, dlqRoot = Some(root)).parseIfRaw(raw, topic)
+    val (good, bad) = new PipelineService(spark, dlqRoot = Some(root))
+      .parseIfRaw(raw, topic, bare(topic))
     (good, bad.get)
   }
 
-  private def parses(df: DataFrame): Seq[JsonToStructs] =
-    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case j: JsonToStructs => j
-    }))
+  /** The parses in `df`'s optimized plan; a streaming frame is only
+    * optimized per micro-batch, so its analyzed plan. */
+  private def parses(df: DataFrame): Seq[JsonToStructs] = {
+    val plan = if (df.isStreaming) df.queryExecution.analyzed else df.queryExecution.optimizedPlan
+    plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+  }
 
   /** Computes `.constraints` of a frame's optimized plan, as a
     * `foreachBatch` sink does for every micro-batch, within `seconds`: a
@@ -122,10 +147,13 @@ class IngestParseSpec extends SparkSpec {
     val wide = TopicConfig("wide", schemaFields =
       graft.IngestBench.fields.map { case (n, t) => FieldDef(n, t) })
     val root = Files.createTempDirectory("graft_ingest_parse_wide").toString
-    val (good, bad) = new PipelineService(spark, dlqRoot = Some(root)).parseIfRaw(raw, wide)
-    constraintsWithin(good, 60)
-    constraintsWithin(SinkMapper(graft.IngestBench.mappings)(good), 60)
-    constraintsWithin(bad.get, 60)
+    val svc = new PipelineService(spark, dlqRoot = Some(root))
+    for (cfg <- Seq(bare(wide), telemetry)) {
+      val (good, bad) = svc.parseIfRaw(raw, wide, cfg)
+      constraintsWithin(good, 60)
+      constraintsWithin(SinkMapper(graft.IngestBench.mappings)(good), 60)
+      constraintsWithin(bad.get, 60)
+    }
   }
 
   /** The single-`from_json` split the config start used before each frame
@@ -135,8 +163,9 @@ class IngestParseSpec extends SparkSpec {
     val corruptField = "__corrupt_rec"
     val parseSchema = StructType(schema.fields :+ StructField(corruptField, StringType))
     val parsed = df.withColumn("__parsed",
-      from_json(col(jsonCol), parseSchema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corruptField)))
+      from_json(col(jsonCol), parseSchema, Map("mode" -> "PERMISSIVE",
+        "columnNameOfCorruptRecord" -> corruptField,
+        "allowSingleQuotes" -> "false", "allowNonNumericNumbers" -> "false")))
     val allNull = schema.fieldNames
       .map(f => col("__parsed").getField(f).isNull)
       .reduceOption(_ && _).getOrElse(lit(true))
@@ -185,6 +214,10 @@ class IngestParseSpec extends SparkSpec {
       validity("""{"s":null}""") && validity("""{"s":"framed","i":9}"""))
     assert(!validity("""{"i":"x"}""") && !validity("{}") && !validity("not json") &&
       !validity("""{"s":"a\q"}"""))
+    assert(!validity("""{"s":'single'}""") && !validity("""{"f":NaN}""") &&
+      !validity("""{"s":NaN}""") && !validity("""{"zzz":NaN,"i":1}"""))
+    // Spark's parser stops after the first JSON value: trailing data passes
+    assert(validity("""{"i":1}{"i":2}""") && validity("""{"i":3} trailing"""))
   }
 
   test("JsonIngest.ingest keeps lineage on both sides of the split") {
@@ -196,5 +229,189 @@ class IngestParseSpec extends SparkSpec {
     val d = dlq.select("offset").collect().map(_.getLong(0)).toSet
     assert(g.intersect(d).isEmpty && (g ++ d).size == corpus.size + 1)
     assert(dlq.columns.toSeq == Seq("__raw", "offset"))
+  }
+
+  test("a config start parses the non-string and the mapped fields: 16 of the telemetry schema's 35") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Array[Byte], java.sql.Timestamp, Int, Long)]
+    var handed: DataFrame = null
+    val svc = new PipelineService(spark,
+      checkpointRoot = Some(Files.createTempDirectory("graft_ingest_guard").toString),
+      sourceReader = (_, _) => mem.toDF().toDF("value", "timestamp", "partition", "offset"),
+      sinkAttach = (df, _, _, _) => { handed = df; df.writeStream.format("noop") })
+    assert(svc.create(telemetry).isRight)
+    val started = svc.startFromConfig(telemetry.pipelineId)
+    try assert(started.isRight, started) finally { svc.terminate(telemetry.pipelineId); () }
+    val parse = parses(handed)
+    assert(parse.size == 1, handed.queryExecution.analyzed.treeString)
+    val schema = graft.types.EngineSchema.structFor(graft.IngestBench.fields)
+    val mapped = graft.IngestBench.mappings.map(_.sourceField).toSet
+    val expected = schema.fields.filter(f => f.dataType != StringType || mapped(f.name))
+    assert(expected.length == 16)
+    assert(parse.head.schema.asInstanceOf[StructType].fields.toSeq ==
+      expected.toSeq :+ StructField("__corrupt_rec", StringType))
+    // the frame carries what the pipeline reads, plus the lineage columns
+    assert(handed.columns.toSeq ==
+      schema.fieldNames.filter(mapped).toSeq ++ Seq("partition", "offset"))
+  }
+
+  /** JSON for one event of `fields`: `value(field, i)` or a default per
+    * declared type, with the `overrides` (field → raw JSON value) spliced
+    * in. */
+  private def event(fields: Seq[FieldDef], i: Int, value: PartialFunction[(String, Int), String],
+                    overrides: (String, String)*): String = {
+    val o = overrides.toMap
+    fields.map { f =>
+      val v = o.getOrElse(f.name, value.applyOrElse((f.name, i), (_: (String, Int)) =>
+        f.`type` match {
+          case "string" => s""""${f.name}-${i % 5}""""
+          case "int" => (i * 7 % 11).toString
+          case "float" => s"${i % 6}.25"
+          case "bool" => (i % 2 == 0).toString
+          case "array" => s"""["a$i","b"]"""
+          case "map" => s"""{"region":"r${i % 3}","pod":"p$i"}"""
+        }))
+      s""""${f.name}":$v"""
+    }.mkString("{", ",", "}")
+  }
+
+  /** Poison-laced payloads for a topic: valid events, then every way one
+    * event can go wrong — a type mismatch or a bare `NaN` in each field
+    * that is not a string (mapped or not), single quotes or `NaN` in each
+    * string field, and the payloads that are never an event. */
+  private def corpusFor(fields: Seq[FieldDef], value: PartialFunction[(String, Int), String]): Seq[String] = {
+    val valid = (0 until 12).map(event(fields, _, value))
+    val perField = fields.zipWithIndex.flatMap { case (f, k) =>
+      val i = 20 + k
+      f.`type` match {
+        case "string" => Seq(event(fields, i, value, f.name -> "'single'"),
+          event(fields, i, value, f.name -> "NaN"), event(fields, i, value, f.name -> """{"x":[1]}"""),
+          event(fields, i, value, f.name -> "null"), s"""{"${f.name}":"alone"}""")
+        case "map" => Seq(event(fields, i, value, f.name -> "[1]"),
+          event(fields, i, value, f.name -> """{"k":{"deep":1}}"""))
+        case _ => Seq(event(fields, i, value, f.name -> "\"mismatch\""),
+          event(fields, i, value, f.name -> "NaN"), event(fields, i, value, f.name -> "{}"))
+      }
+    }
+    valid ++ perField ++ Seq("not json", "{}", """{"zzz":1}""", "[1,2]", "null",
+      event(fields, 3, value).dropRight(1), event(fields, 4, value) + " trailing",
+      valid.head) // an exact duplicate
+  }
+
+  /** The rows `cfg`'s sink would insert (mapped) and its ingestor-DLQ
+    * payloads, for `payloads` per topic through the streaming compile, with
+    * the valid frames parsed as `parseCfg` reads them. */
+  private def runConfig(cfg: PipelineConfig, parseCfg: PipelineConfig,
+                        payloads: Map[String, Seq[String]]): (Seq[String], Seq[String], Seq[StructType]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val svc = new PipelineService(spark,
+      dlqRoot = Some(Files.createTempDirectory("graft_ingest_eq_dlq").toString))
+    val mems = cfg.source.topics.map(t =>
+      t.name -> MemoryStream[(Array[Byte], java.sql.Timestamp, Int, Long)](1)).toMap
+    val frames = cfg.source.topics.map { t =>
+      val raw = mems(t.name).toDF().toDF("value", "timestamp", "partition", "offset")
+      t.name -> svc.parseIfRaw(raw, t, parseCfg)
+    }.toMap
+    val compiled =
+      if (cfg.join.exists(_.enabled)) PipelineCompiler.streamingJoin(cfg, frames.map { case (n, f) => n -> f._1 })
+      else PipelineCompiler.streaming(cfg, frames.values.head._1)
+    val sink = ClickHouseSink.Config(url = "http://unused", database = "default", table = "t",
+      mappings = cfg.sink.get.tableMapping.map(m =>
+        SinkMapper.ColumnMapping(m.fieldName, m.columnName, m.columnType)))
+    val inserted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val dlq = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def ckpt() = Files.createTempDirectory("graft_ingest_eq_ckpt").toString
+    val q = compiled.writeStream.option("checkpointLocation", ckpt())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        ClickHouseSink.writeBatchWith(sink, m => m.toJSON.collect().foreach(inserted.add))(b)
+      }.start()
+    val dq = frames.values.flatMap(_._2).reduce(_.unionByName(_)).writeStream
+      .option("checkpointLocation", ckpt())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.collect().foreach(r => dlq.add(r.getString(0)))
+      }.start()
+    try {
+      // topics in config order, each event 10 ms after the one before
+      var t = 1735689600000L
+      cfg.source.topics.foreach { tc =>
+        mems(tc.name).addData(payloads(tc.name).zipWithIndex.map { case (p, o) =>
+          t += 10
+          (p.getBytes("UTF-8"), new java.sql.Timestamp(t), 0, o.toLong)
+        })
+        q.processAllAvailable(); dq.processAllAvailable()
+      }
+    } finally { q.stop(); dq.stop() }
+    import scala.jdk.CollectionConverters._
+    (inserted.asScala.toSeq.sorted, dlq.asScala.toSeq.sorted,
+      frames.values.map(f => parses(f._1).head.schema.asInstanceOf[StructType]).toSeq)
+  }
+
+  test("pruned and full-parse config starts insert the same rows and dead-letter the same payloads") {
+    val fields = Seq(FieldDef("id", "string"), FieldDef("level", "string"),
+      FieldDef("k.pod", "string"), FieldDef("k", "map"), FieldDef("meta", "map"),
+      FieldDef("n", "int"), FieldDef("score", "float"), FieldDef("ok", "bool"),
+      FieldDef("tags", "array"), FieldDef("note", "string"), FieldDef("extra", "string"))
+    val events = TopicConfig("events", schemaFields = fields)
+    def mapping(ms: (String, String, String)*) = Some(SinkConfig(table = "t",
+      url = Some("jdbc:ch://ch:8123/default"),
+      tableMapping = ms.map { case (f, c, t) => SinkMapping(fieldName = f, columnName = c, columnType = t) }))
+    val byId: PartialFunction[(String, Int), String] = {
+      case ("id", i) => s""""id-${i % 8}""""
+      case ("level", i) => if (i % 4 == 0) "\"DEBUG\"" else "\"INFO\""
+    }
+    val plain = Map("events" -> corpusFor(fields, byId))
+
+    val orders = TopicConfig("orders", schemaFields = Seq(FieldDef("order_id", "string"),
+      FieldDef("user", "string"), FieldDef("amt", "float"), FieldDef("qty", "int"),
+      FieldDef("note", "string"), FieldDef("flags", "array")))
+    val users = TopicConfig("users", schemaFields = Seq(FieldDef("uid", "string"),
+      FieldDef("email", "string"), FieldDef("age", "int"), FieldDef("bio", "string"),
+      FieldDef("prefs", "map")))
+    val joined = Map(
+      "orders" -> corpusFor(orders.schemaFields, {
+        case ("order_id", i) => s""""o$i""""
+        case ("user", i) => s""""u${i % 4}""""
+      }),
+      "users" -> corpusFor(users.schemaFields, { case ("uid", i) => s""""u$i"""" }))
+
+    val configs = Seq(
+      // literal-dotted (`k.pod` beside a declared `k`) and root-segment
+      // (`meta.region` inside the `meta` map) names
+      PipelineConfig("mapping", SourceConfig(topics = Seq(events)), sink = mapping(
+        ("id", "id", "String"), ("k.pod", "pod", "String"), ("meta.region", "region", "String"),
+        ("n", "n", "Int64"))) -> plain,
+      PipelineConfig("filter", SourceConfig(topics = Seq(events)),
+        filter = Some(FilterConfig("level != 'DEBUG' && n > 2")),
+        sink = mapping(("id", "id", "String"), ("note", "note", "String"))) -> plain,
+      PipelineConfig("dedup", SourceConfig(topics = Seq(events.copy(
+        deduplication = Some(DedupConfig(idField = "id", timeWindow = "1h"))))),
+        transform = Some(TransformConfig(Seq(
+          TransformRule("id", "id", "string"), TransformRule("upper(level)", "lvl", "string"),
+          TransformRule("n * 2", "n2", "int64")))),
+        sink = mapping(("id", "id", "String"), ("lvl", "lvl", "String"), ("n2", "n2", "Int64"))) -> plain,
+      PipelineConfig("join", SourceConfig(topics = Seq(orders, users)),
+        join = Some(JoinConfig(sources = Seq(
+          JoinSource("orders", "user", "1h", "left", Some("timestamp")),
+          JoinSource("users", "uid", "1h", "right", Some("timestamp"))),
+          projections = Seq(JoinProjection("orders", "order_id", "order_id"),
+            JoinProjection("orders", "amt", "amt"), JoinProjection("users", "email", "email")))),
+        sink = mapping(("order_id", "order_id", "String"), ("amt", "amt", "Float64"),
+          ("email", "email", "String"))) -> joined)
+
+    for ((cfg, payloads) <- configs) {
+      val (prunedRows, prunedDlq, prunedParse) = runConfig(cfg, cfg, payloads)
+      val (fullRows, fullDlq, fullParse) = runConfig(cfg, bare(cfg.source.topics: _*), payloads)
+      withClue(cfg.pipelineId) {
+        assert(prunedRows.nonEmpty && prunedDlq.nonEmpty)
+        assert(prunedRows == fullRows)
+        assert(prunedDlq == fullDlq)
+        // the full run parses every declared field, the pruned run fewer
+        assert(fullParse.map(_.length).sum ==
+          cfg.source.topics.map(_.schemaFields.size + 1).sum)
+        assert(prunedParse.map(_.length).sum < fullParse.map(_.length).sum)
+        // an unread field that is not a string is still validated
+        assert(prunedDlq.exists(_.contains("NaN")) && prunedDlq.exists(_.contains("mismatch")))
+      }
+    }
   }
 }

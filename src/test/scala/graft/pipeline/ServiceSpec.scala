@@ -81,7 +81,7 @@ class ServiceSpec extends SparkSpec {
       .select(col("value").cast("binary"), col("timestamp"), col("partition"), col("offset"))
     val topic = TopicConfig("t", schemaFields = Seq(
       FieldDef("id", "string"), FieldDef("timestamp", "string")))
-    val (parsed, _) = svc.parseIfRaw(raw, topic)
+    val (parsed, _) = svc.parseIfRaw(raw, topic, PipelineConfig("p", SourceConfig(topics = Seq(topic))))
     assert(parsed.columns.count(_ == "timestamp") == 1,
       s"duplicate columns: ${parsed.columns.mkString(",")}")
     // the DECLARED field wins: its value is the parsed JSON one

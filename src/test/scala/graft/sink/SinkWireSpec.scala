@@ -1100,9 +1100,11 @@ class SinkWireSpec extends SparkSpec {
               try {
                 // first response byte = the fixture has finished the INSERT
                 up.getInputStream.read()
+                // counted before the reset: the client can see the RST and
+                // reach its assertions before this thread runs again
+                killed.incrementAndGet()
                 s.setSoLinger(true, 0) // RST, not FIN
                 s.close(); up.close()
-                killed.incrementAndGet()
               } catch { case _: Exception => () }
             })
             t.setDaemon(true); t.start()

@@ -184,8 +184,19 @@ class SourcesSpec extends SparkSpec {
   test("schema pruning keeps mapped fields and dotted-name roots") {
     val schema = StructType(Seq(
       StructField("a", StringType), StructField("b", LongType),
-      StructField("k.pod.name", StringType), StructField("unused", StringType)))
-    val pruned = JsonIngest.pruneSchema(schema, Seq("a", "k.pod.name"))
-    assert(pruned.fieldNames.toSeq == Seq("a", "k.pod.name"))
+      StructField("k.pod.name", StringType), StructField("unused", StringType),
+      StructField("user", StructType(Seq(StructField("id", StringType))))))
+    // a dotted name reads its literal column, else its root segment
+    val read = graft.pipeline.PipelineCompiler.fieldsRead(schema, Nil,
+      Seq("a", "k.pod.name", "user.id"))
+    assert(read == Set("a", "k.pod.name", "user"))
+    // the valid frame returns only what is read; the unread non-string
+    // field `b` is still validated
+    val (good, bad) = JsonIngest.ingest(Seq(
+      """{"a":"x","b":1,"k.pod.name":"p","unused":"u","user":{"id":"7"}}""",
+      """{"a":"y","b":"not a long"}""").toDF("v"), "v", schema, read = Some(read))
+    assert(good.columns.toSeq == Seq("a", "k.pod.name", "user"))
+    assert(good.collect().map(_.toSeq).toSeq == Seq(Seq("x", "p", org.apache.spark.sql.Row("7"))))
+    assert(bad.collect().map(_.getString(0)).toSeq == Seq("""{"a":"y","b":"not a long"}"""))
   }
 }
