@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local Spark session every batch main runs in (Bench, the three
-  * ingest mains, Verify, ProfileQuery). */
+/** The local Spark session every main runs in (Bench, the three ingest
+  * mains, Verify, ProfileQuery, and the ApiMain and OtlpMain services),
+  * so the service runs configured like the benches. */
 object LocalSession {
 
   /** Local cores and shuffle width: SPARK_GRAFT_CPUS, default 32. */

@@ -4,12 +4,8 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-
-import graft.types.{CHType, RowBinaryEncoder}
 
 /** ClickHouse HTTP-interface INSERT leg — the sink's wire protocol
   * (the reference reaches ClickHouse through clickhouse-go's native
@@ -29,18 +25,23 @@ import graft.types.{CHType, RowBinaryEncoder}
   * reaches [[ClickHouseSink.foreachBatchHandler]] wrapped in Spark's task
   * exception — exactly the chain the classifier's cause-walk handles.
   *
-  * JSONEachRow slabs are built from Spark's internal rows: each task
-  * appends the UTF-8 bytes of `to_json(struct(..))` and a '\n' straight to
-  * its slab and records where each row ends. A slab the server rejects
-  * replays row by row from those byte ranges, and a row's text is decoded
-  * only when the server rejects it on its own.
+  * Two INSERT formats, one loop: [[Config.format]] picks the JSONEachRow
+  * or the Native encoder, and [[InsertLoop]] slabs, POSTs and (isolating)
+  * replays them exactly as it does for the native TCP leg.
   */
 object ClickHouseHttp {
 
   /** A ClickHouse server fault, message formatted exactly as the server
-    * formats it so [[ErrorClassifier.classify]] needs no special case. */
+    * formats it so [[ErrorClassifier.classify]] needs no special case.
+    * `serverMessage` is the server's own text, without that prefix. */
   final case class CHServerException(code: Int, serverMessage: String)
     extends RuntimeException(s"Code: $code. DB::Exception: $serverMessage")
+
+  /** A server error line without its `Code: N. DB::Exception: ` prefix (or
+    * the bare `DB::Exception: ` the native protocol sends), so a
+    * [[CHServerException]] carries it exactly once. */
+  private[sink] def serverText(line: String): String =
+    line.replaceFirst("^(Code:\\s*\\d+\\.\\s*)?DB::Exception:\\s*", "")
 
   final case class Config(
     endpoint: String,                          // http://host:8123
@@ -51,9 +52,9 @@ object ClickHouseHttp {
     /** Per-insert settings passed as URL params (async_insert,
       * wait_for_async_insert, insert_deduplicate, ...). */
     settings: Map[String, String] = Map.empty,
-    format: String = "JSONEachRow",            // or RowBinary, or Native
-    /** column → ClickHouse type, required for RowBinary/Native encoding
-      * (JSONEachRow is self-describing; the binary formats are typed). */
+    format: String = "JSONEachRow",            // or Native
+    /** column → ClickHouse type, required for Native encoding
+      * (JSONEachRow is self-describing; Native blocks are typed). */
     columnTypes: Map[String, String] = Map.empty,
     /** gzip the INSERT body (`Content-Encoding: gzip`, which the server
       * decompresses natively) — JSONEachRow compresses ~10×, so at scale
@@ -187,10 +188,7 @@ object ClickHouseHttp {
           .orElse("Code:\\s*(\\d+)".r.findFirstMatchIn(respBody).map(_.group(1).toInt))
         code match {
           case Some(n) =>
-            // strip the server's own "Code: N. DB::Exception:" prefix so the
-            // rethrown message carries it exactly once
-            val msg = respBody.linesIterator.nextOption().getOrElse("")
-              .replaceFirst("^Code:\\s*\\d+\\.\\s*DB::Exception:\\s*", "")
+            val msg = serverText(respBody.linesIterator.nextOption().getOrElse(""))
             throw CHServerException(n, if (msg.nonEmpty) msg else s"HTTP $status")
           case None =>
             throw new IOException(
@@ -201,289 +199,42 @@ object ClickHouseHttp {
     } finally conn.disconnect()
   }
 
-  /** Spark's default JSON timestamp format is millisecond-precision (SSS)
-    * — a DateTime64(6) column would silently lose its microseconds on the
-    * JSONEachRow leg (caught by RowBinaryPropertySpec's cross-format
-    * comparison). Emit full micros; best_effort parses them fine. */
-  private val jsonOpts: java.util.Map[String, String] =
-    java.util.Map.of("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-
-  /** Columns by VERBATIM name: destination columns are user config and may
-    * contain dots (legal CH identifiers, quoted everywhere else via
-    * quoteId) — a bare col(name) would resolve "a.b" as a nested field. */
-  private def verbatimCols(df: DataFrame): Seq[org.apache.spark.sql.Column] =
-    df.columns.toSeq.map(n => df.col(s"`${n.replace("`", "``")}`"))
-
-  private def jsonCol(df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{struct, to_json}
-    to_json(struct(verbatimCols(df): _*), jsonOpts)
-  }
-
   /** One failed row of an isolating write: (the row as JSON, why it was
     * dead-lettered). Every leg builds its failure set with this one
     * explicit encoder, so no batch derives one by reflection. */
   val FailurePair: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
 
-  /** One task's INSERT slab: encoded rows back to back, plus where each row
-    * ends, so a rejected slab replays row by row from its own bytes. A row
-    * is written to `out` and closed with [[endRow]], which says when the
-    * slab is full: at maxRowsPerPost rows or maxBytesPerPost bytes,
-    * whichever trips first. */
-  private final class Slab(conf: Config, query: String) {
-    private object body extends java.io.ByteArrayOutputStream(1 << 20) {
-      def bytes: Array[Byte] = buf
+  /** The encoder [[Config.format]] names, over this leg's slab bounds. */
+  private def slabs(c: Config, df: DataFrame, isolate: Boolean): RDD[InsertLoop.Slab] =
+    c.format match {
+      case "JSONEachRow" => InsertLoop.jsonSlabs(df, c.maxRowsPerPost, c.maxBytesPerPost)
+      case "Native" =>
+        InsertLoop.nativeSlabs(df, c.columnTypes, c.maxRowsPerPost, c.maxBytesPerPost, isolate)
+      case other =>
+        throw new IllegalArgumentException(s"unsupported INSERT format $other (JSONEachRow or Native)")
     }
-    private var ends = new Array[Int](1024)
-    private var rows = 0
-    val out: java.io.OutputStream = body
-
-    def endRow(): Boolean = {
-      if (rows == ends.length) ends = java.util.Arrays.copyOf(ends, rows * 2)
-      ends(rows) = body.size
-      rows += 1
-      rows >= conf.maxRowsPerPost || body.size >= conf.maxBytesPerPost
-    }
-
-    private def start(i: Int): Int = if (i == 0) 0 else ends(i - 1)
-
-    /** Row `i` of a JSONEachRow slab, decoded, without its '\n'. */
-    def text(i: Int): String = new String(body.bytes, start(i), ends(i) - start(i) - 1, UTF_8)
-
-    /** POST the slab and empty it. With `rejected`, a slab the server turns
-      * down with a ROW-DATA fault (see [[ErrorClassifier.rowDataFaultCodes]])
-      * is re-posted row by row, and each row the server turns down again
-      * goes to `rejected(row index, error)`. Any other fault rethrows, so
-      * the batch handler's classify/retry policy governs it —
-      * dead-lettering good rows on a dropped table or rotated credential
-      * would be unrecoverable. */
-    def flush(rejected: Option[(Int, String) => Unit]): Unit = if (rows > 0) {
-      try post(conf, query, body.toByteArray)
-      catch {
-        case CHServerException(code, _)
-            if rejected.isDefined && ErrorClassifier.isRowDataFault(code) =>
-          for (i <- 0 until rows) {
-            try post(conf, query, java.util.Arrays.copyOfRange(body.bytes, start(i), ends(i)))
-            catch {
-              case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
-                rejected.get(i, s"Code: $code. DB::Exception: $msg")
-            }
-          }
-      }
-      body.reset()
-      rows = 0
-    }
-  }
 
   /** The DataFrame write leg: the frame is already in sink shape (mapped
-    * columns, target names) — encode per the configured format and POST
-    * per partition, slabbed at maxRowsPerPost rows / maxBytesPerPost
-    * bytes, whichever trips first. */
-  def write(c: Config)(df: DataFrame): Unit = c.format match {
-    case "Native" => writeNativeBlocks(c)(df)
-    case "RowBinary" => writeRowBinarySlabs(c)(df)
-    // the slabs are POSTed as each partition is computed
-    case _ => jsonSlabs(c, df, isolate = false).foreachPartition(_ => ())
-  }
+    * columns, target names). Each partition POSTs its own slabs; any fault
+    * rethrows ([[InsertLoop.write]]). */
+  def write(c: Config)(df: DataFrame): Unit =
+    InsertLoop.write(slabs(c, df, isolate = false), insertQuery(c, df.columns.toSeq), () => new InsertLoop.Http(c))
 
-  /** Insert with poison-row isolation — the reference's append-error path
-    * (internal/sink/clickhouse.go:536-718: a row the server rejects is
-    * dead-lettered ALONE; the rest of the batch replays and lands).
+  /** Insert with poison-row isolation ([[InsertLoop.isolating]]): rows the
+    * server or the encoder rejects come back as (jsonRow, error), and every
+    * other row lands.
     *
-    * Each executor task slabs its own rows as [[write]] does; when a slab
-    * is rejected with a ROW-DATA fault (parse/convert/range — see
-    * [[ErrorClassifier.rowDataFaultCodes]]), the task replays THAT slab
-    * row-by-row: poison rows come back as (jsonRow, serverError) for the
-    * caller to dead-letter, every other row lands. Isolation is strictly
-    * task-local, so slabs that already landed — in this task or any
-    * other — are never re-posted and can't duplicate. Non-data faults
-    * (table/auth/overload) rethrow so the batch handler's classify/retry
-    * policy governs them; a retryable fault mid-replay likewise rethrows
-    * (at-least-once, the reference's NACK-redeliver semantics — pair with
-    * insert_deduplicate/idempotency for exactly-once).
-    *
-    * Returns the failed rows as a DISTRIBUTED Dataset[(jsonRow, serverError)]
-    * — never a driver collection: the failure-set size is bounded only by
-    * the batch (a mapping edit can poison EVERY row), and the reference
-    * dead-letters worker-side for the same reason
+    * Returns the failed rows as a DISTRIBUTED Dataset — never a driver
+    * collection: the failure-set size is bounded only by the batch (a
+    * mapping edit can poison EVERY row), and the reference dead-letters
+    * worker-side for the same reason
     * (internal/processor/dlq_processor.go:35-69). LAZY: the INSERTs execute
     * when the returned Dataset is acted on — act on it exactly once, or
-    * persist it first, or slabs will re-POST (at-least-once).
-    * [[ClickHouseSink.writeBatchHttp]] does persist + count + distributed
-    * DLQ write, returning only counts to the driver. */
-  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] = c.format match {
-    case "Native" => writeIsolatingNative(c)(df)
-    case "RowBinary" => writeIsolatingRowBinary(c)(df)
-    case _ => df.sparkSession.createDataset(jsonSlabs(c, df, isolate = true))(FailurePair)
-  }
-
-  /** The JSONEachRow legs, plain and isolating. Each task walks the
-    * internal rows of `to_json(struct(..))` and appends each row's UTF-8
-    * bytes and a '\n' to its slab: no String, no per-row array and no
-    * Dataset encoder between the JSON encoder and the POST body. A row's
-    * text is decoded only when the server rejects it (`isolate`); without
-    * `isolate` a rejected slab rethrows. Null fields are OMITTED, and
-    * ClickHouse fills omitted fields with column defaults
-    * (input_format_defaults_for_omitted_fields, on by default) — the same
-    * absent→NULL/default contract the reference mapper implements. Runs
-    * when the returned RDD is computed; yields the failed rows. */
-  private def jsonSlabs(c: Config, df: DataFrame, isolate: Boolean): RDD[(String, String)] = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    df.select(jsonCol(df)).queryExecution.toRdd.mapPartitions { it =>
-      val slab = new Slab(conf, query)
-      val failed = ArrayBuffer[(String, String)]()
-      val rejected =
-        if (isolate) Some((i: Int, err: String) => { failed += ((slab.text(i), err)); () })
-        else None
-      while (it.hasNext) {
-        it.next().getUTF8String(0).writeTo(slab.out)
-        slab.out.write('\n')
-        if (slab.endRow()) slab.flush(rejected)
-      }
-      slab.flush(rejected)
-      failed.iterator
-    }
-  }
-
-  /** RowBinary: column-order binary via [[RowBinaryEncoder]], driven by
-    * [[Config.columnTypes]] — roughly half the wire bytes and no
-    * server-side text parsing. */
-  private def rowBytes(c: Config, df: DataFrame): Dataset[Array[Byte]] = {
-    val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    df.map(row => RowBinaryEncoder.encode(row, types))(Encoders.BINARY)
-  }
-
-  private def writeRowBinarySlabs(c: Config)(df: DataFrame): Unit = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    rowBytes(c, df).foreachPartition { (it: Iterator[Array[Byte]]) =>
-      val slab = new Slab(conf, query)
-      it.foreach { b =>
-        slab.out.write(b)
-        if (slab.endRow()) slab.flush(None)
-      }
-      slab.flush(None)
-    }
-  }
-
-  private def writeIsolatingRowBinary(c: Config)(df: DataFrame): Dataset[(String, String)] = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    rowBytesWithRepr(c, df).mapPartitions { it =>
-      val slab = new Slab(conf, query)
-      val reprs = ArrayBuffer[String]()
-      val failed = ArrayBuffer[(String, String)]()
-      val rejected = Some((i: Int, err: String) => { failed += ((reprs(i), err)); () })
-      def flush(): Unit = { slab.flush(rejected); reprs.clear() }
-      it.foreach {
-        // client-side encode failure (FixedString overflow, unknown enum
-        // value): that row is poison by construction — dead-letter it
-        // alone, the rest of the slab proceeds
-        case (repr, null, err) => failed += ((repr, err))
-        case (repr, bytes, _) =>
-          slab.out.write(bytes)
-          reprs += repr
-          if (slab.endRow()) flush()
-      }
-      flush()
-      failed.iterator
-    }(FailurePair)
-  }
-
-  /** Native-format write leg: COLUMNAR blocks per partition — one type
-    * dispatch per column per block instead of per value, the layout the
-    * server stores without per-row reassembly (see
-    * [[graft.types.NativeEncoder]]). Slab bounds are the same
-    * rows/bytes-whichever-trips-first as the row-oriented leg. A
-    * client-side encode fault rethrows (this path has no isolation —
-    * use [[writeIsolating]] for that). */
-  private def writeNativeBlocks(c: Config)(df: DataFrame): Unit = {
-    val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    val query = insertQuery(c, names)
-    val conf = c
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      var b = new graft.types.NativeEncoder.BlockBuilder(names, types)
-      def flush(): Unit = if (b.rowCount > 0) {
-        post(conf, query, b.build())
-        b = new graft.types.NativeEncoder.BlockBuilder(names, types)
-      }
-      it.foreach { row =>
-        b.tryAppend(row).foreach(err => throw new IllegalArgumentException(err))
-        if (b.rowCount >= conf.maxRowsPerPost || b.byteSize >= conf.maxBytesPerPost)
-          flush()
-      }
-      flush()
-    }
-  }
-
-  /** Poison-row isolation on the Native leg: a client-side value fault
-    * rolls just that row out of the block (BlockBuilder.tryAppend is
-    * row-atomic across columns); a server row-data fault replays the
-    * block's rows as single-row blocks, exactly the row-oriented legs'
-    * replay shape. Distributed + lazy like [[writeIsolating]]. */
-  private def writeIsolatingNative(c: Config)(df: DataFrame): Dataset[(String, String)] = {
-    val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    val query = insertQuery(c, names)
-    val conf = c
-    import org.apache.spark.sql.functions.struct
-    df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
-      .mapPartitions { it =>
-        val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-        var builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-        val chunk = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.Row)]()
-        def replayRowwise(): Unit = chunk.foreach { case (repr, r) =>
-          try post(conf, query,
-            graft.types.NativeEncoder.encodeSingleRow(names, types, r))
-          catch {
-            case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
-              failed += ((repr, s"Code: $code. DB::Exception: $msg"))
-          }
-        }
-        def flush(): Unit = {
-          if (builder.rowCount > 0) {
-            try post(conf, query, builder.build())
-            catch {
-              case CHServerException(code, _) if ErrorClassifier.isRowDataFault(code) =>
-                replayRowwise()
-            }
-          }
-          builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-          chunk.clear()
-        }
-        it.foreach { row =>
-          val repr = row.getString(0)
-          val r = row.getStruct(1)
-          builder.tryAppend(r) match {
-            case Some(err) => failed += ((repr, err))
-            case None =>
-              chunk += ((repr, r))
-              if (builder.rowCount >= conf.maxRowsPerPost ||
-                builder.byteSize >= conf.maxBytesPerPost) flush()
-          }
-        }
-        flush()
-        failed.iterator
-      }(FailurePair)
-  }
-
-  /** RowBinary isolation-path encoding: (jsonRepr, bytesOrNull,
-    * encodeErrOrNull) per row. The JSON repr rides along so a dead-lettered row's
-    * original_message is always readable — binary rows included — and so a
-    * row the ENCODER rejects still reaches the DLQ with its content. */
-  private def rowBytesWithRepr(c: Config, df: DataFrame): Dataset[(String, Array[Byte], String)] = {
-    import org.apache.spark.sql.functions.struct
-    val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
-      .map { row =>
-        val j = row.getString(0)
-        try (j, RowBinaryEncoder.encode(row.getStruct(1), types), null: String)
-        catch { case e: Exception =>
-          (j, null: Array[Byte], Option(e.getMessage).getOrElse(e.toString))
-        }
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.STRING))
-  }
+    * persist it first. [[ClickHouseSink.writeBatchHttp]] does persist +
+    * count + distributed DLQ write, returning only counts to the driver. */
+  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] =
+    df.sparkSession.createDataset(InsertLoop.isolating(slabs(c, df, isolate = true),
+      insertQuery(c, df.columns.toSeq), () => new InsertLoop.Http(c)))(FailurePair)
 
   /** Introspect the target table's schema — `DESCRIBE TABLE db.t FORMAT
     * JSONEachRow` (the query the reference's UI issues,
@@ -531,8 +282,7 @@ object ClickHouseHttp {
         val code = Option(conn.getHeaderField("X-ClickHouse-Exception-Code"))
           .flatMap(_.trim.toIntOption).getOrElse(1000)
         throw CHServerException(code,
-          body.linesIterator.nextOption().getOrElse(s"HTTP $status")
-            .replaceFirst("^Code:\\s*\\d+\\.\\s*DB::Exception:\\s*", ""))
+          serverText(body.linesIterator.nextOption().getOrElse(s"HTTP $status")))
       }
       body
     } finally conn.disconnect()
@@ -590,8 +340,7 @@ object ClickHouseHttp {
         val code = Option(conn.getHeaderField("X-ClickHouse-Exception-Code"))
           .flatMap(_.trim.toIntOption).getOrElse(1000)
         throw CHServerException(code,
-          text.linesIterator.nextOption().getOrElse(s"HTTP $status")
-            .replaceFirst("^Code:\\s*\\d+\\.\\s*DB::Exception:\\s*", ""))
+          serverText(text.linesIterator.nextOption().getOrElse(s"HTTP $status")))
       }
       val raw = conn.getInputStream
       val body =

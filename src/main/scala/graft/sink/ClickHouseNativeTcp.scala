@@ -4,9 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputSt
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-
-import graft.types.{CHType, NativeEncoder}
 
 /** ClickHouse NATIVE TCP protocol client (the :9000 wire) — the transport
   * the reference actually uses through clickhouse-go
@@ -23,8 +22,9 @@ import graft.types.{CHType, NativeEncoder}
   * slabs. At 100 TB the sink's INSERT count is millions of slabs; making
   * each slab a framed packet on a kept-open socket instead of an HTTP
   * round-trip removes a per-slab RTT + header cost. Block payloads are
-  * byte-identical to the HTTP Native leg ([[NativeEncoder]] — one encoder,
-  * two transports).
+  * byte-identical to the HTTP Native leg: both run [[InsertLoop]] with its
+  * Native encoder, and only the transport differs, so slabbing, row-wise
+  * replay and dead-letter errors match the HTTP leg's.
   *
   * Protocol revision: both ends speak 54449 and negotiate
   * min(client, server), which pins the exact optional-field set below
@@ -455,110 +455,22 @@ object ClickHouseNativeTcp {
   // ------------------------------------------------------------ DataFrame legs
 
   /** Strict write: each partition opens one connection and streams its
-    * slab blocks through a SINGLE INSERT query — the per-slab round-trips
-    * the HTTP leg pays collapse into framed packets on one socket. */
-  def write(c: Config)(df: DataFrame): Unit = {
-    val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    val query = insertQuery(c, names)
-    val conf = c
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        val conn = new Conn(conf)
-        try conn.insert(query, blockIterator(names, types, conf, it))
-        finally conn.close()
-      }
-    }
-  }
+    * blocks through a SINGLE INSERT query — the per-slab round-trips the
+    * HTTP leg pays collapse into framed packets on one socket. */
+  def write(c: Config)(df: DataFrame): Unit =
+    InsertLoop.write(slabs(c, df, isolate = false), insertQuery(c, df.columns.toSeq), () => new InsertLoop.Tcp(c))
 
-  /** Write with poison-row isolation, mirroring
-    * [[ClickHouseHttp.writeIsolating]]: each block goes through its OWN
-    * INSERT (a mid-stream fault must not take sibling blocks down — in
-    * real CH, blocks of one streamed INSERT commit independently as they
-    * arrive, so isolation needs the block to be the failure unit). A
-    * block rejected with a row-data fault replays row-by-row, each row a
-    * single-block INSERT; poison rows come back as (jsonRow, error) in a
-    * DISTRIBUTED dataset — nothing funnels through the driver. */
-  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] = {
-    import org.apache.spark.sql.Encoders
-    val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-    val query = insertQuery(c, names)
-    val conf = c
-    val jsonDf = df.select(
-      org.apache.spark.sql.functions.to_json(
-        org.apache.spark.sql.functions.struct(df.columns.toSeq.map(n =>
-          df.col(s"`${n.replace("`", "``")}`")): _*)).as("__json"),
-      org.apache.spark.sql.functions.struct(df.columns.toSeq.map(n =>
-        df.col(s"`${n.replace("`", "``")}`")): _*).as("__row"))
-    jsonDf.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-        var conn = new Conn(conf)
-        def reconnect(): Unit = { try conn.close() catch { case _: Exception => () }; conn = new Conn(conf) }
-        try {
-          val pending = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.Row)]()
-          var builder = new NativeEncoder.BlockBuilder(names, types)
-          def flush(): Unit = if (builder.rowCount > 0 || pending.nonEmpty) {
-            val rows = pending.toVector
-            pending.clear()
-            val block = builder.build()
-            builder = new NativeEncoder.BlockBuilder(names, types)
-            try conn.insert(query, Iterator.single(block))
-            catch {
-              case ClickHouseHttp.CHServerException(code, msg)
-                  if ErrorClassifier.isRowDataFault(code) =>
-                reconnect()
-                // replay the block's rows one at a time, own INSERT each
-                rows.foreach { case (json, row) =>
-                  try {
-                    val one = NativeEncoder.encodeSingleRow(names, types, row)
-                    conn.insert(query, Iterator.single(one))
-                  } catch {
-                    case ClickHouseHttp.CHServerException(code2, msg2)
-                        if ErrorClassifier.isRowDataFault(code2) =>
-                      failed += ((json, msg2))
-                      reconnect()
-                    case e: IllegalArgumentException =>
-                      failed += ((json, Option(e.getMessage).getOrElse(e.toString)))
-                  }
-                }
-              case e: Throwable => throw e
-            }
-          }
-          it.foreach { r =>
-            val json = r.getString(0)
-            val row = r.getStruct(1)
-            builder.tryAppend(row) match {
-              case None =>
-                pending += ((json, row))
-                if (builder.rowCount >= conf.maxRowsPerBlock ||
-                    builder.byteSize >= conf.maxBytesPerBlock) flush()
-              case Some(err) => failed += ((json, err)) // client-side reject
-            }
-          }
-          flush()
-        } finally conn.close()
-        failed.iterator
-      }
-    }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
-  }
+  /** Write with poison-row isolation ([[InsertLoop.isolating]], the loop
+    * [[ClickHouseHttp.writeIsolating]] runs): each block goes through its
+    * OWN INSERT, a rejected block replays row by row as single-row blocks
+    * on a fresh connection, and poison rows come back as (jsonRow, error)
+    * in a DISTRIBUTED dataset — nothing funnels through the driver. */
+  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] =
+    df.sparkSession.createDataset(InsertLoop.isolating(slabs(c, df, isolate = true),
+      insertQuery(c, df.columns.toSeq), () => new InsertLoop.Tcp(c)))(ClickHouseHttp.FailurePair)
 
-  private def blockIterator(names: Seq[String], types: Seq[CHType], c: Config,
-                            it: Iterator[org.apache.spark.sql.Row]): Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
-      def hasNext: Boolean = it.hasNext
-      def next(): Array[Byte] = {
-        val b = new NativeEncoder.BlockBuilder(names, types)
-        while (it.hasNext && b.rowCount < c.maxRowsPerBlock &&
-               b.byteSize < c.maxBytesPerBlock) {
-          val row = it.next()
-          b.tryAppend(row).foreach(err => throw new IllegalArgumentException(err))
-        }
-        b.build()
-      }
-    }
+  private def slabs(c: Config, df: DataFrame, isolate: Boolean): RDD[InsertLoop.Slab] =
+    InsertLoop.nativeSlabs(df, c.columnTypes, c.maxRowsPerBlock, c.maxBytesPerBlock, isolate)
 
   private def quoteId(s: String) = s"`${s.replace("`", "``")}`"
 
@@ -574,22 +486,22 @@ object ClickHouseNativeTcp {
 
   // -------------------------------------------------------- wire primitives
 
+  /** A server Exception packet as [[ClickHouseHttp.CHServerException]]:
+    * the first code, and the server's own text — its `DB::Exception: `
+    * prefix stripped as [[ClickHouseHttp.post]] strips it — with nested
+    * causes joined. */
   private[sink] def readException(in: InputStream): ClickHouseHttp.CHServerException = {
-    val sb = new StringBuilder
-    var code = 0
+    val code = rI32(in)
+    val texts = Seq.newBuilder[String]
     var nested = true
-    var first = true
     while (nested) {
-      val c = rI32(in)
-      if (first) { code = c; first = false }
-      val name = rStr(in)
-      val msg = rStr(in)
+      rStr(in) // exception class name
+      texts += ClickHouseHttp.serverText(rStr(in))
       rStr(in) // stack trace
       nested = rByte(in) == 1
-      if (sb.nonEmpty) sb.append("; caused by: ")
-      sb.append(s"$name: $msg")
+      if (nested) rI32(in) // the cause's own code
     }
-    ClickHouseHttp.CHServerException(code, s"Code: $code. ${sb.toString}")
+    ClickHouseHttp.CHServerException(code, texts.result().mkString("; caused by: "))
   }
 
   private def skipProgress(in: InputStream, rev: Long): Unit = {

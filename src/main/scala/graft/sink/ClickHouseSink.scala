@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.sink.SinkMapper.ColumnMapping
@@ -14,6 +14,11 @@ import graft.sink.SinkMapper.ColumnMapping
   * 141-206); within-batch idempotency (reference batch/clickhouse/batch.go)
   * is `dropDuplicates` on the source offset column; cross-restart
   * exactly-once comes from checkpointing + idempotent insert keys.
+  *
+  * Two INSERT formats, one loop: the URL scheme picks the transport once
+  * ([[leg]]: HTTP interface or native TCP), [[Config.httpFormat]] picks
+  * JSONEachRow or Native on HTTP (TCP is always Native), and every leg
+  * runs [[InsertLoop]]'s strict or isolating policy.
   */
 object ClickHouseSink {
 
@@ -35,7 +40,7 @@ object ClickHouseSink {
     versionMappings: Map[String, Seq[ColumnMapping]] = Map.empty,
     /** Per-insert ClickHouse settings for the HTTP leg (async_insert, ...). */
     httpSettings: Map[String, String] = Map.empty,
-    /** Wire encoding for the HTTP leg: JSONEachRow or RowBinary. */
+    /** Wire encoding for the HTTP leg: JSONEachRow or Native. */
     httpFormat: String = "JSONEachRow",
     /** gzip INSERT bodies on the HTTP leg (Content-Encoding: gzip). */
     httpCompress: Boolean = false,
@@ -57,24 +62,30 @@ object ClickHouseSink {
   def insertSql(c: Config): String =
     s"INSERT INTO ${c.database}.${c.table} (${insertColumns(c).mkString(", ")})"
 
-  /** Protocol selection by URL scheme: `http(s)://host:8123` uses the
-    * public ClickHouse HTTP interface (no driver jar needed, per-partition
-    * parallel POSTs); `tcp://host:9000` speaks the native TCP protocol
-    * (streamed columnar blocks on a kept-open socket — the reference's
-    * own transport via clickhouse-go); `jdbc:...` uses the JDBC leg. */
+  /** Protocol selection by URL scheme, as (strict write, isolating
+    * write): `http(s)://host:8123` uses the public ClickHouse HTTP
+    * interface (no driver jar needed, per-partition parallel POSTs);
+    * `tcp://host:9000` speaks the native TCP protocol (streamed columnar
+    * blocks on a kept-open socket — the reference's own transport via
+    * clickhouse-go); None for any other scheme (`jdbc:...`). */
+  private def leg(c: Config): Option[(DataFrame => Unit, DataFrame => Dataset[(String, String)])] =
+    if (c.url.startsWith("http://") || c.url.startsWith("https://")) {
+      val h = httpConfig(c)
+      Some((ClickHouseHttp.write(h), ClickHouseHttp.writeIsolating(h)))
+    } else if (c.url.startsWith("tcp://") || c.url.startsWith("tcps://")) {
+      val t = ClickHouseNativeTcp.parseEndpoint(c.url, c)
+      Some((ClickHouseNativeTcp.write(t), ClickHouseNativeTcp.writeIsolating(t)))
+    } else None
+
   private[sink] def terminalWrite(c: Config): DataFrame => Unit =
-    if (c.url.startsWith("http://") || c.url.startsWith("https://"))
-      ClickHouseHttp.write(httpConfig(c))
-    else if (c.url.startsWith("tcp://") || c.url.startsWith("tcps://"))
-      ClickHouseNativeTcp.write(ClickHouseNativeTcp.parseEndpoint(c.url, c))
-    else jdbcWrite(c)
+    leg(c).fold(jdbcWrite(c) _)(_._1)
 
   private[sink] def httpConfig(c: Config): ClickHouseHttp.Config =
     ClickHouseHttp.Config(endpoint = c.url, database = c.database,
       table = c.table, username = c.username, password = c.password,
       settings = c.httpSettings, format = c.httpFormat,
       compress = c.httpCompress,
-      // RowBinary needs the declared CH type per column; the union over
+      // Native needs the declared CH type per column; the union over
       // version mappings is safe (a column keeps one type across versions)
       columnTypes = (c.mappings ++ c.versionMappings.values.flatten)
         .map(m => m.column -> m.chType).toMap,
@@ -143,7 +154,7 @@ object ClickHouseSink {
     // UNNAMED Tuple needs a positional wire format: Spark's JSON encoder
     // writes a struct as an OBJECT keyed `_1`.._n, which no server setting
     // maps back to tuple positions — fail at config time, not per batch
-    if (c.httpFormat != "RowBinary" && c.httpFormat != "Native") {
+    if (c.httpFormat != "Native") {
       def unnamedTuple(t: graft.types.CHType): Boolean = {
         import graft.types.CHType._
         t match {
@@ -161,7 +172,7 @@ object ClickHouseSink {
       }
       if (bad.nonEmpty)
         return Left(bad.map(m => s"column ${m.column}: unnamed Tuple type " +
-          s"${m.chType} requires the RowBinary or Native format").mkString("; "))
+          s"${m.chType} requires the Native format").mkString("; "))
     }
     val server =
       try ClickHouseHttp.describeTable(httpConfig(c)).toMap
@@ -191,14 +202,10 @@ object ClickHouseSink {
               val st = strip(graft.types.CHType.parse(serverType))
               val mt = strip(graft.types.CHType.parse(m.chType))
               mt == st ||
-                // a plain-String mapping may feed FixedString on the
-                // JSONEachRow and Native legs (the server's converting
-                // insert enforces the width — Native blocks carry their
-                // own types). RowBinary has no block header: the server
-                // reads by TABLE type, so a String/FixedString
-                // disagreement there genuinely corrupts the framing
-                (c.httpFormat != "RowBinary" &&
-                  mt == graft.types.CHType.CHString &&
+                // a plain-String mapping may feed FixedString (the
+                // server's converting insert enforces the width — Native
+                // blocks carry their own types)
+                (mt == graft.types.CHType.CHString &&
                   st.isInstanceOf[graft.types.CHType.CHFixedString])
             } catch { case _: Exception => true } // unparseable → server's call
           if (ok) None
@@ -225,10 +232,8 @@ object ClickHouseSink {
     * the driver. Mirrors the reference's worker-side DLQ publish
     * (dlq_processor.go:35-69). Returns the number of dead-lettered rows. */
   private[sink] def writeBatchHttp(c: Config, dlq: DataFrame => Unit)(df: DataFrame): Long = {
-    val isolating: DataFrame => org.apache.spark.sql.Dataset[(String, String)] =
-      if (c.url.startsWith("tcp://") || c.url.startsWith("tcps://"))
-        ClickHouseNativeTcp.writeIsolating(ClickHouseNativeTcp.parseEndpoint(c.url, c))
-      else ClickHouseHttp.writeIsolating(httpConfig(c))
+    val isolating = leg(c).getOrElse(
+      throw new IllegalArgumentException(s"no isolating INSERT leg for ${c.url}"))._2
     val failed = batchSlices(c)(df)
       .map(isolating)
       .reduce(_ union _)
@@ -299,9 +304,7 @@ object ClickHouseSink {
       }
     }
 
-    val httpLeg = write.isEmpty &&
-      (c.url.startsWith("http://") || c.url.startsWith("https://") ||
-        c.url.startsWith("tcp://") || c.url.startsWith("tcps://"))
+    val httpLeg = write.isEmpty && leg(c).isDefined
 
     (batch: DataFrame, batchId: Long) => {
       try {

@@ -261,7 +261,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
                   val unknown = cols.filterNot(c => table.columns.exists(_.name == c))
                   if (unknown.nonEmpty) {
                     fail(ex, 404, 16, s"No such column ${unknown.head} in table $db.$tbl")
-                  } else if (fmt != "JSONEachRow" && fmt != "RowBinary" && fmt != "Native") {
+                  } else if (fmt != "JSONEachRow" && fmt != "Native") {
                     fail(ex, 400, 73, s"Unknown format $fmt")
                   } else {
                     try {
@@ -284,8 +284,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
                       } else {
                         val parsed =
                           if (fmt == "JSONEachRow") parseJsonEachRow(table, cols, body)
-                          else if (fmt == "Native") parseNative(table, cols, body)
-                          else parseRowBinary(table, cols, body)
+                          else parseNative(table, cols, body)
                         tables.synchronized {
                           table.accepted += parsed.count
                           if (retainRows) table.rows ++= parsed.rows
@@ -506,7 +505,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
       case CHFixedString(n) => v match {
         case s: String =>
           if (s.getBytes(UTF_8).length > n)
-            throw CHFault(131, s"String too long for type FixedString($n): '$s' for column $col")
+            throw CHFault(131, s"Too large value for FixedString($n) in column $col")
           s
         case _ => throw CHFault(6, s"Cannot parse FixedString($n) for column $col")
       }
@@ -689,35 +688,14 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     }
   }
 
-  // -------------------------------------------------------------- RowBinary
+  // ------------------------------------------------------- binary values
 
-  /** RowBinary decode against the declared column types — the public
-    * column-order binary format (varint-length strings, little-endian
-    * fixed-width numerics, uint32/int64 datetimes, big-endian-halved UUID,
-    * varint-counted arrays/maps, nullable flag byte). */
-  private def parseRowBinary(table: Table, cols: Seq[String], body: Array[Byte]): RowSlab = {
-    val in = new RowBinaryReader(body)
-    val out = mutable.ArrayBuffer[Map[String, Any]]()
-    val colTypes = cols.map(c => c -> table.columns.find(_.name == c).get.chType)
-    var n = 0L
-    try {
-      while (in.hasMore) {
-        if (retainRows)
-          out += colTypes.map { case (name, t) =>
-            name -> readBinary(in, t, name)
-          }.toMap
-        else // bench fixture: validating walk, no value materialization
-          colTypes.foreach { case (name, t) => validateBinary(in, t, name) }
-        n += 1
-      }
-    } catch {
-      // a row truncated mid-value: the real server's CANNOT_READ_ALL_DATA
-      case _: IndexOutOfBoundsException =>
-        throw CHFault(33, s"Cannot read all data: truncated RowBinary row after $n rows")
-    }
-    RowSlab(out.toSeq, n)
-  }
-
+  /** One SCALAR value in the RowBinary per-value layout (varint-length
+    * strings, little-endian fixed-width numerics, uint32/int64 datetimes,
+    * UUID as two little-endian u64 halves) — the layout of a scalar Native
+    * column, which [[parseNative]] decodes through here. Composite
+    * columns (LowCardinality, Nullable, Array, Map, Tuple) are walked by
+    * [[readNativeColumn]] and never reach this. */
   private def readBinary(in: RowBinaryReader, t: CHType, col: String): Any = {
     import CHType._
     t match {
@@ -759,21 +737,8 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
         val unit = math.pow(10, (6 - math.min(p, 6)).toDouble).toLong
         if (p <= 6) ticks * unit
         else ticks / math.pow(10, (p - 6).toDouble).toLong
-      case CHLowCardinality(inner) => readBinary(in, inner, col)
-      case CHNullable(inner) =>
-        if (in.u8() == 1) null else readBinary(in, inner, col)
-      case CHMap(_, vt) =>
-        val n = in.varint()
-        (0L until n).map(_ => in.str() -> readBinary(in, vt, col)).toMap
-      case CHArray(inner) =>
-        val n = in.varint()
-        (0L until n).map(_ => readBinary(in, inner, col)).toVector
       case CHIPv4 => graft.types.IpCodec.formatV4(in.i32() & 0xffffffffL)
       case CHIPv6 => graft.types.IpCodec.formatV6(in.take(16))
-      case t @ CHTuple(elems) =>
-        // positional element values back to back, no count byte
-        val vals = elems.map(e => readBinary(in, e._2, col)).toVector
-        if (t.isNamed) t.elementNames.zip(vals).toMap else vals
     }
   }
 
@@ -1068,39 +1033,6 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
       case other => // future shapes: full decode rather than a wrong skip
         var i = 0
         while (i < n) { readBinary(in, other, col); i += 1 }
-    }
-  }
-
-  /** RowBinary row-major counterpart of [[validateNativeColumn]]: one
-    * value's validating skip. Same kept/skipped check set. */
-  private def validateBinary(in: RowBinaryReader, t: CHType, col: String): Unit = {
-    import CHType._
-    t match {
-      case CHString => in.skip(in.varint())
-      case CHFixedString(w) => in.skip(w.toLong)
-      case CHBool | CHInt(8) | CHUInt(8) => in.skip(1L)
-      case CHInt(16) | CHUInt(16) | CHDate => in.skip(2L)
-      case CHInt(32) | CHUInt(32) | CHFloat32 | CHDateTime(_) | CHDate32 | CHIPv4 =>
-        in.skip(4L)
-      case CHInt(64) | CHUInt(64) | CHFloat64 | CHDateTime64(_, _) => in.skip(8L)
-      case CHDecimal(p, _) => in.skip(if (p <= 9) 4L else if (p <= 18) 8L else 16L)
-      case CHEnum(bits, values) =>
-        val id = if (bits == 8) in.u8().toByte.toInt else in.i16()
-        if (!values.exists(_._2 == id))
-          throw CHFault(691, s"Unknown enum id $id for column $col")
-      case CHUUID | CHIPv6 => in.skip(16L)
-      case CHLowCardinality(inner) => validateBinary(in, inner, col)
-      case CHNullable(inner) => if (in.u8() != 1) validateBinary(in, inner, col)
-      case CHMap(_, vt) =>
-        val n = in.varint()
-        var i = 0L
-        while (i < n) { in.skip(in.varint()); validateBinary(in, vt, col); i += 1 }
-      case CHArray(inner) =>
-        val n = in.varint()
-        var i = 0L
-        while (i < n) { validateBinary(in, inner, col); i += 1 }
-      case CHTuple(elems) => elems.foreach(e => validateBinary(in, e._2, col))
-      case other => readBinary(in, other, col); ()
     }
   }
 

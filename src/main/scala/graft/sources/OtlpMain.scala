@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone OTLP receiver service (the reference's otlp-receiver
   * deployable): both transports on their own ports, landing flattened
   * rows in a parquet spool a streaming pipeline reads as a file source.
@@ -17,13 +15,7 @@ object OtlpMain {
       java.nio.file.Files.createTempDirectory("graft_otlp_spool").toString)
     val httpPort = args.drop(1).headOption.map(_.toInt).getOrElse(4318)
     val grpcPort = args.drop(2).headOption.map(_.toInt).getOrElse(4317)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val receiver = new OtlpReceiver(spark, spool)
     val http = receiver.start(httpPort)
     val grpc = receiver.grpc().start(grpcPort)

@@ -5,31 +5,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.Row
 
-/** ClickHouse RowBinary encoder — the public column-order binary INSERT
-  * format (varint-length strings, little-endian fixed-width numerics,
+/** ClickHouse per-VALUE binary layouts (the public RowBinary value
+  * encoding: varint-length strings, little-endian fixed-width numerics,
   * uint32 DateTime / int64 DateTime64 ticks, UUID as two little-endian
-  * u64 halves, varint-counted Array/Map, Nullable flag byte). The
-  * reference's native-protocol batch append
-  * (internal/batch/clickhouse/batch.go:60-80) is the same columnar-binary
-  * idea; RowBinary is its documented HTTP-interface equivalent and
-  * roughly halves wire volume vs JSONEachRow — at 100 TB the INSERT
-  * bytes are the sink's network bill.
+  * u64 halves, varint-counted Array/Map, Nullable flag byte). The sink no
+  * longer inserts RowBinary rows; [[NativeEncoder]] writes its scalar
+  * columns and its LowCardinality dictionaries through [[writeValue]] and
+  * re-parses stringified Map values through [[reparse]].
   *
   * Values come from [[graft.sink.SinkMapper]] output, so each column's
   * Spark type is exactly `CHType.sparkType`; a null in a non-Nullable
   * column encodes the ClickHouse column default (the server's
   * input_format_null_as_default contract, mirrored client-side). */
 object RowBinaryEncoder {
-
-  def encode(row: Row, types: Seq[CHType]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(256)
-    var i = 0
-    while (i < types.length) {
-      writeValue(out, types(i), if (row.isNullAt(i)) null else row.get(i))
-      i += 1
-    }
-    out.toByteArray
-  }
 
   private[types] def writeValue(out: ByteArrayOutputStream, t: CHType, v: Any): Unit = {
     import CHType._
@@ -246,7 +234,7 @@ object RowBinaryEncoder {
         // type is itself complex cannot round-trip through the string
         // contract — declare Map(String, String) or use JSONEachRow
         throw new IllegalArgumentException(
-          "Code: 6. DB::Exception: RowBinary Map values of complex type are " +
+          "Code: 6. DB::Exception: Map values of complex type are " +
             "not supported by the String-coercion mapping contract")
     }
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-regression guard: no driver query may silently acquire an
@@ -58,5 +60,16 @@ class PlanGuardSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"scale-killer join shapes found:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  /** One session builder: every main builds its session through
+    * [[LocalSession]], so the service runs configured like the benches. */
+  test("SparkSession.builder appears in src/main only in LocalSession.scala") {
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSeq
+    assert(builders == Seq("LocalSession.scala"))
   }
 }

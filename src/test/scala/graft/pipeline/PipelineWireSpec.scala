@@ -81,11 +81,12 @@ class PipelineWireSpec extends SparkSpec {
       drainNew()
 
       // feature assertion: dedup kept the FIRST row per id; the server
-      // rejected the overflowing name; the corrupt frame never reached CH
+      // rejected the overflowing name; the corrupt frame never reached CH.
+      // Sorted sequences, not sets: a replayed duplicate row must fail.
       def tableRows() = ch.rows("default", "events_test")
-        .map(r => (r("id"), r("name"))).toSet
-      assert(tableRows() == Set(("123", "John Doe"), ("456", "Jane Smith"),
-        ("789", "Bob Johnson")))
+        .map(r => (r("id").toString, r("name").toString)).sorted
+      assert(tableRows() == Seq(("123", "John Doe"), ("456", "Jane Smith"),
+        ("789", "Bob Johnson")).sorted)
 
       // both legs dead-lettered their poison rows with their own evidence
       val dlq = spark.read.parquet(s"$dlqRoot/$id")
@@ -113,8 +114,8 @@ class PipelineWireSpec extends SparkSpec {
         // exactly-once: the restart resumed from committed offsets (rows
         // 1-6 never replayed into CH) and the restored dedup state dropped
         // the duplicate id 123 — only 007 is new
-        assert(tableRows() == Set(("123", "John Doe"), ("456", "Jane Smith"),
-          ("789", "Bob Johnson"), ("007", "James Bond")))
+        assert(tableRows() == Seq(("123", "John Doe"), ("456", "Jane Smith"),
+          ("789", "Bob Johnson"), ("007", "James Bond")).sorted)
       } finally { svc2.terminate(id); () }
     } finally { kafka.stop(); ch.stop() }
   }
@@ -165,8 +166,8 @@ class PipelineWireSpec extends SparkSpec {
       drainNew()
       try {
         assert(ch.rows("default", "events_tcp")
-          .map(r => (r("id"), r("name"))).toSet ==
-          Set(("123", "John Doe"), ("456", "Bob Johnson")))
+          .map(r => (r("id").toString, r("name").toString)).sorted ==
+          Seq(("123", "John Doe"), ("456", "Bob Johnson")))
         val dlq = spark.read.parquet(s"$dlqRoot/$id")
         val sinkDlq = dlq.filter("component = 'sink'").collect()
         assert(sinkDlq.length == 1)

@@ -6,13 +6,15 @@ import graft.SparkSpec
 import graft.sink.SinkMapper.ColumnMapping
 
 /** Cross-format wire property: the SAME randomized rows inserted over the
-  * ClickHouse HTTP leg once as RowBinary and once as JSONEachRow must
-  * store IDENTICALLY. The two encodings share no code — RowBinary is
-  * [[graft.types.RowBinaryEncoder]] (hand-rolled binary) and JSONEachRow
+  * ClickHouse HTTP leg once as Native and once as JSONEachRow must store
+  * IDENTICALLY. The two encodings share no code — Native is
+  * [[graft.types.NativeEncoder]] over the RowBinary value layouts of
+  * [[graft.types.RowBinaryEncoder]] (hand-rolled binary), and JSONEachRow
   * is Spark's JSON writer + the fixture's Jackson parse — so agreement
   * across 200 seeded-random rows per run is strong evidence both are
   * right (an encoder bug and a matching decoder bug in BOTH formats at
-  * once is the only false-pass). */
+  * once is the only false-pass). The suite keeps the name of the RowBinary
+  * INSERT format it first compared; that format is retired. */
 class RowBinaryPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,11 +81,10 @@ class RowBinaryPropertySpec extends SparkSpec {
     )
   }
 
-  test("200 seeded-random rows store identically over RowBinary, JSONEachRow and Native") {
+  test("200 seeded-random rows store identically over JSONEachRow and Native") {
     val ch = new MiniClickHouseServer()
     ch.start()
     try {
-      ch.createTable("default", "t_rb", schema)
       ch.createTable("default", "t_json", schema)
       ch.createTable("default", "t_native", schema)
       val seed = 20260815L // deterministic: failures must reproduce
@@ -94,31 +95,23 @@ class RowBinaryPropertySpec extends SparkSpec {
       def c(table: String, fmt: String) = ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = table,
         mappings = mappings, httpFormat = fmt)
-      ClickHouseSink.writeBatch(c("t_rb", "RowBinary"))(df)
       ClickHouseSink.writeBatch(c("t_json", "JSONEachRow"))(df)
       ClickHouseSink.writeBatch(c("t_native", "Native"))(df)
-      assert(ch.rowCount("default", "t_rb") == 200)
       assert(ch.rowCount("default", "t_json") == 200)
       assert(ch.rowCount("default", "t_native") == 200)
-      val rb = ch.rows("default", "t_rb").map(r => r("id") -> r).toMap
       val js = ch.rows("default", "t_json").map(r => r("id") -> r).toMap
       val nt = ch.rows("default", "t_native").map(r => r("id") -> r).toMap
-      assert(rb.keySet == js.keySet && rb.keySet == nt.keySet)
-      rb.foreach { case (id, rbRow) =>
+      assert(nt.keySet == js.keySet)
+      nt.foreach { case (id, ntRow) =>
         val jsRow = js(id)
-        val ntRow = nt(id)
         schema.map(_._1).foreach { col =>
-          (rbRow(col), jsRow(col)) match {
+          (ntRow(col), jsRow(col)) match {
             case (a: Double, b: Double) =>
               assert(math.abs(a - b) <= math.max(1e-9, math.abs(b) * 1e-6),
-                s"row $id col $col: RowBinary=$a JSON=$b")
+                s"row $id col $col: Native=$a JSON=$b")
             case (a, b) =>
-              assert(a == b, s"row $id col $col: RowBinary=$a JSON=$b")
+              assert(a == b, s"row $id col $col: Native=$a JSON=$b")
           }
-          // Native's per-value scalar layout is RowBinary's, so bit-equality
-          // with the RowBinary leg is the right bar (no float tolerance)
-          assert(ntRow(col) == rbRow(col),
-            s"row $id col $col: Native=${ntRow(col)} RowBinary=${rbRow(col)}")
         }
       }
     } finally ch.stop()
@@ -128,13 +121,12 @@ class RowBinaryPropertySpec extends SparkSpec {
     // The throughput fixtures run with retainRows=false, where the server
     // walks blocks with width-skips instead of materializing values. The
     // walk must accept the identical byte streams the full decode accepts
-    // (same 200-row / 22-type corpus, all three formats) and still raise
+    // (same 200-row / 22-type corpus, both formats) and still raise
     // the decode path's only two fallible faults: unknown enum id (691)
     // and truncation (33).
     val ch = new MiniClickHouseServer(retainRows = false)
     ch.start()
     try {
-      ch.createTable("default", "t_rb", schema)
       ch.createTable("default", "t_json", schema)
       ch.createTable("default", "t_native", schema)
       val rows = randomRows(new Random(20260815L), 200)
@@ -144,37 +136,35 @@ class RowBinaryPropertySpec extends SparkSpec {
       def c(table: String, fmt: String) = ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = table,
         mappings = mappings, httpFormat = fmt)
-      ClickHouseSink.writeBatch(c("t_rb", "RowBinary"))(df)
       ClickHouseSink.writeBatch(c("t_json", "JSONEachRow"))(df)
       ClickHouseSink.writeBatch(c("t_native", "Native"))(df)
-      Seq("t_rb", "t_json", "t_native").foreach { t =>
+      Seq("t_json", "t_native").foreach { t =>
         assert(ch.acceptedCount("default", t) == 200, t)
         assert(ch.rowCount("default", t) == 0, s"$t must not materialize rows")
       }
 
-      ch.createTable("default", "neg", Seq("e" -> "Enum8('a' = 1)"))
-      val hc = ClickHouseHttp.Config(endpoint = ch.endpoint,
-        database = "default", table = "neg", format = "RowBinary")
-      // one RowBinary row: enum id 99, not in the type's value set
-      val badEnum = intercept[ClickHouseHttp.CHServerException] {
-        ClickHouseHttp.post(hc,
-          "INSERT INTO `default`.`neg` (`e`) FORMAT RowBinary", Array[Byte](99))
-      }
-      assert(badEnum.code == 691)
-      // a Native block declaring 1 row of Int64 but carrying only 3 bytes
-      val truncated = {
+      /** A one-column, one-row Native block: `name`, `chType`, then `data`. */
+      def block(name: String, chType: String, data: Array[Byte]): Array[Byte] = {
         val out = new java.io.ByteArrayOutputStream()
-        def vi(v: Long): Unit = ClickHouseNativeTcp.wVarint(out, v)
-        def s(x: String): Unit = ClickHouseNativeTcp.wStr(out, x)
-        vi(1); vi(1) // 1 col, 1 row
-        s("e2"); s("Int64")
-        out.write(Array[Byte](1, 2, 3))
+        ClickHouseNativeTcp.wVarint(out, 1); ClickHouseNativeTcp.wVarint(out, 1)
+        ClickHouseNativeTcp.wStr(out, name); ClickHouseNativeTcp.wStr(out, chType)
+        out.write(data)
         out.toByteArray
       }
+      val hc = ClickHouseHttp.Config(endpoint = ch.endpoint,
+        database = "default", table = "neg", format = "Native")
+      ch.createTable("default", "neg", Seq("e" -> "Enum8('a' = 1)"))
+      // enum id 99, not in the type's value set
+      val badEnum = intercept[ClickHouseHttp.CHServerException] {
+        ClickHouseHttp.post(hc, "INSERT INTO `default`.`neg` (`e`) FORMAT Native",
+          block("e", "Enum8('a' = 1)", Array[Byte](99)))
+      }
+      assert(badEnum.code == 691)
+      // 1 row of Int64 declared, only 3 bytes carried
       ch.createTable("default", "neg2", Seq("e2" -> "Int64"))
       val cut = intercept[ClickHouseHttp.CHServerException] {
-        ClickHouseHttp.post(hc.copy(table = "neg2", format = "Native"),
-          "INSERT INTO `default`.`neg2` (`e2`) FORMAT Native", truncated)
+        ClickHouseHttp.post(hc, "INSERT INTO `default`.`neg2` (`e2`) FORMAT Native",
+          block("e2", "Int64", Array[Byte](1, 2, 3)))
       }
       assert(cut.code == 33)
     } finally ch.stop()

@@ -435,7 +435,7 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("RowBinary: full type matrix round-trips over the wire byte-for-byte") {
+  test("Native: full type matrix round-trips over the HTTP wire byte-for-byte") {
     withServer() { ch =>
       ch.createTable("default", "rb", Seq(
         "s" -> "String", "fs" -> "FixedString(6)", "b" -> "Bool",
@@ -478,7 +478,7 @@ class SinkWireSpec extends SparkSpec {
           "cast('18446744073709551615' as decimal(20,0)) as u64",
           "cast(1.5 as float) as f32", "cast(2.25 as double) as f64",
           "e", "uid", "dt", "dt64", "lc", "ns", "m", "arr")
-      val c = cfg(ch, "rb", m).copy(httpFormat = "RowBinary")
+      val c = cfg(ch, "rb", m).copy(httpFormat = "Native")
       ClickHouseSink.writeBatch(c)(df)
       assert(ch.rowCount("default", "rb") == 1)
       val r = ch.rows("default", "rb").head
@@ -501,53 +501,8 @@ class SinkWireSpec extends SparkSpec {
       assert(r("ns") == null)
       assert(r("m") == Map("k1" -> "v1", "k2" -> "v2"))
       assert(r("arr") == Vector(BigInt(1), BigInt(2), BigInt(3)))
-      // the INSERT really went over the wire as RowBinary
-      assert(ch.receivedQueries.asScala.exists(_._1.endsWith("FORMAT RowBinary")))
-    }
-  }
-
-  test("RowBinary: poison-row isolation works on the binary leg too") {
-    withServer() { ch =>
-      // the TABLE only knows enum id 1; the client mapping also knows
-      // 'blue' = 2 — a 'blue' row encodes fine client-side and is rejected
-      // by the SERVER mid-slab with 691, so isolation must replay the slab
-      // row-by-row (each single-row POST decodes independently: RowBinary
-      // framing is per-POST) and dead-letter exactly the poison row
-      ch.createTable("default", "rb2",
-        Seq("id" -> "Int32", "color" -> "Enum8('red' = 1)"))
-      val m = Seq(ColumnMapping("id", "id", "Int32"),
-        ColumnMapping("color", "color", "Enum8('red' = 1, 'blue' = 2)"))
-      val df = Seq((1, "red"), (2, "blue"), (3, "red")).toDF("id", "color")
-      val dlq = dlqQueue()
-      ClickHouseSink.foreachBatchHandler(
-        cfg(ch, "rb2", m).copy(httpFormat = "RowBinary"),
-        d => d.collect().foreach(dlq.add))(df.coalesce(1), 0L)
-      assert(ch.rowCount("default", "rb2") == 2)
-      assert(ch.rows("default", "rb2").map(_("id")).toSet == Set(BigInt(1), BigInt(3)))
-      assert(dlq.size == 1)
-      assert(dlq.asScala.head.getAs[String]("error").contains("Code: 691"))
-      // binary rows still dead-letter with a READABLE JSON original_message
-      val orig = dlq.asScala.head.getAs[String]("original_message")
-      assert(orig.contains("blue"), s"expected row content in: $orig")
-    }
-  }
-
-  test("RowBinary: a row the ENCODER rejects is isolated, not the whole batch") {
-    withServer() { ch =>
-      ch.createTable("default", "rb3",
-        Seq("id" -> "Int32", "code" -> "FixedString(3)"))
-      val hc = ClickHouseHttp.Config(ch.endpoint, "default", "rb3",
-        format = "RowBinary",
-        columnTypes = Map("id" -> "Int32", "code" -> "FixedString(3)"))
-      // no mapper in front: the 7-byte value reaches the encoder raw, which
-      // must reject THAT row client-side and let the others land
-      val df = Seq((1, "ok"), (2, "toolong"), (3, "ko")).toDF("id", "code")
-        .coalesce(1)
-      val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
-      assert(ch.rowCount("default", "rb3") == 2)
-      assert(failed.size == 1)
-      assert(failed.head._2.contains("Code: 131"))
-      assert(failed.head._1.contains("toolong"), "JSON repr carries the content")
+      // the INSERT really went over the wire as Native
+      assert(ch.receivedQueries.asScala.exists(_._1.endsWith("FORMAT Native")))
     }
   }
 
@@ -614,7 +569,7 @@ class SinkWireSpec extends SparkSpec {
         ColumnMapping("pod", "k8s.pod.name", "String"))
       val df = Seq(("us-east-1", "api-1"), ("eu-west-1", "api-2"))
         .toDF("region", "pod")
-      for (fmt <- Seq("JSONEachRow", "RowBinary")) {
+      for (fmt <- Seq("JSONEachRow", "Native")) {
         ClickHouseSink.writeBatch(cfg(ch, "dotted", m)
           .copy(httpFormat = fmt))(df)
       }
@@ -649,7 +604,7 @@ class SinkWireSpec extends SparkSpec {
       val schema = Seq("id" -> "Int32", "price" -> "Decimal(10, 2)",
         "d" -> "Date", "d32" -> "Date32")
       ch.createTable("default", "dec_json", schema)
-      ch.createTable("default", "dec_rb", schema)
+      ch.createTable("default", "dec_nat", schema)
       val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
       val df = Seq(
         (1, BigDecimal("19.99"), java.sql.Date.valueOf("2025-06-01"),
@@ -660,11 +615,11 @@ class SinkWireSpec extends SparkSpec {
           java.sql.Date.valueOf("1900-01-01"))
       ).toDF("id", "price", "d", "d32")
       ClickHouseSink.writeBatch(cfg(ch, "dec_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "dec_rb", m)
-        .copy(httpFormat = "RowBinary"))(df)
+      ClickHouseSink.writeBatch(cfg(ch, "dec_nat", m)
+        .copy(httpFormat = "Native"))(df)
       def byId(t: String) =
         ch.rows("default", t).map(r => r("id") -> r).toMap
-      val (j, r) = (byId("dec_json"), byId("dec_rb"))
+      val (j, r) = (byId("dec_json"), byId("dec_nat"))
       assert(j.size == 3 && r.size == 3)
       // the two wire encodings share no code; canonical equality across
       // them is the same cross-format oracle RowBinaryPropertySpec uses
@@ -689,16 +644,16 @@ class SinkWireSpec extends SparkSpec {
       assert(ch.rowCount("default", "dec_of") == 2)
       assert(failed.size == 1 && failed.head._2.contains("Code: 407"))
 
-      // RowBinary leg: the ENCODER rejects client-side in the same Code: NNN
+      // Native leg: the ENCODER rejects client-side in the same Code: NNN
       // shape, so poison isolation works without a server round-trip
       ch.createTable("default", "date_of", Seq("id" -> "Int32", "d" -> "Date"))
-      val hcRb = ClickHouseHttp.Config(ch.endpoint, "default", "date_of",
-        format = "RowBinary",
+      val hcNat = ClickHouseHttp.Config(ch.endpoint, "default", "date_of",
+        format = "Native",
         columnTypes = Map("id" -> "Int32", "d" -> "Date"))
       val df2 = Seq((1, java.sql.Date.valueOf("2025-01-01")),
         (2, java.sql.Date.valueOf("1955-11-05")), // pre-1970: u16 Date can't hold it
         (3, java.sql.Date.valueOf("1970-01-01"))).toDF("id", "d").coalesce(1)
-      val failed2 = ClickHouseHttp.writeIsolating(hcRb)(df2).collect().toSeq
+      val failed2 = ClickHouseHttp.writeIsolating(hcNat)(df2).collect().toSeq
       assert(ch.rowCount("default", "date_of") == 2)
       assert(failed2.size == 1 && failed2.head._2.contains("Code: 321"))
       assert(failed2.head._1.contains("1955-11-05"))
@@ -719,28 +674,28 @@ class SinkWireSpec extends SparkSpec {
       assert(ClickHouseSink.validateAgainstTable(cfg(ch, "sev", m)).isRight,
         "escaped-quote enum column must validate against the live schema")
       val df = Seq((1, "won't"), (2, "a=b")).toDF("id", "e")
-      for (fmt <- Seq("JSONEachRow", "RowBinary"))
+      for (fmt <- Seq("JSONEachRow", "Native"))
         ClickHouseSink.writeBatch(cfg(ch, "sev", m).copy(httpFormat = fmt))(df)
       assert(ch.rowCount("default", "sev") == 4)
       assert(ch.rows("default", "sev").map(_("e")).toSet == Set("won't", "a=b"))
     }
   }
 
-  test("Map(String, Int64) column: stringified map values re-encode as typed Int64 on the RowBinary wire") {
+  test("Map(String, Int64) column: stringified map values re-encode as typed Int64 on the Native wire") {
     withServer() { ch =>
       val schema = Seq("id" -> "Int32", "counts" -> "Map(String, Int64)")
       ch.createTable("default", "m_json", schema)
-      ch.createTable("default", "m_rb", schema)
+      ch.createTable("default", "m_nat", schema)
       val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
       // the mapper coerces map VALUES to strings (reference types.go:238-276);
-      // the RowBinary encoder must re-parse them to the declared wire type —
-      // encoding the string raw would corrupt the row framing
+      // the Native encoder must re-parse them to the declared wire type —
+      // encoding the string raw would corrupt the column framing
       val df = Seq((1, Map("a" -> 42L, "b" -> -7L)), (2, Map("z" -> 0L)))
         .toDF("id", "counts")
       ClickHouseSink.writeBatch(cfg(ch, "m_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "m_rb", m).copy(httpFormat = "RowBinary"))(df)
+      ClickHouseSink.writeBatch(cfg(ch, "m_nat", m).copy(httpFormat = "Native"))(df)
       val j = ch.rows("default", "m_json").map(r => r("id") -> r("counts")).toMap
-      val r = ch.rows("default", "m_rb").map(r => r("id") -> r("counts")).toMap
+      val r = ch.rows("default", "m_nat").map(r => r("id") -> r("counts")).toMap
       assert(j == r, s"formats disagree: $j vs $r")
       assert(j(BigInt(1)) == Map("a" -> BigInt(42), "b" -> BigInt(-7)))
     }
@@ -776,7 +731,7 @@ class SinkWireSpec extends SparkSpec {
     withServer() { ch =>
       val schema = Seq("id" -> "Int32", "ts" -> "DateTime64(3)")
       ch.createTable("default", "pre_json", schema)
-      ch.createTable("default", "pre_rb", schema)
+      ch.createTable("default", "pre_nat", schema)
       val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
       def ts(sec: Long, nanos: Int) =
         java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec, nanos.toLong))
@@ -786,10 +741,10 @@ class SinkWireSpec extends SparkSpec {
         (3, ts(1, 250000000))    // post-epoch control
       ).toDF("id", "ts")
       ClickHouseSink.writeBatch(cfg(ch, "pre_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "pre_rb", m)
-        .copy(httpFormat = "RowBinary"))(df)
+      ClickHouseSink.writeBatch(cfg(ch, "pre_nat", m)
+        .copy(httpFormat = "Native"))(df)
       val j = ch.rows("default", "pre_json").map(r => r("id") -> r("ts")).toMap
-      val r = ch.rows("default", "pre_rb").map(r => r("id") -> r("ts")).toMap
+      val r = ch.rows("default", "pre_nat").map(r => r("id") -> r("ts")).toMap
       assert(j == r, s"formats disagree: $j vs $r")
       assert(j(BigInt(1)) == -500000L, "−0.5 s must encode as −0.5 s, not +0.5 s")
       assert(j(BigInt(2)) == -1001000L, "sub-precision pre-epoch digits floor")
@@ -801,7 +756,7 @@ class SinkWireSpec extends SparkSpec {
     withServer() { ch =>
       ch.createTable("default", "dtr", Seq("id" -> "Int32", "t" -> "DateTime"))
       val hc = ClickHouseHttp.Config(ch.endpoint, "default", "dtr",
-        format = "RowBinary",
+        format = "Native",
         columnTypes = Map("id" -> "Int32", "t" -> "DateTime"))
       val df = Seq(
         (1, java.sql.Timestamp.valueOf("2025-06-01 10:00:00")),
@@ -937,11 +892,15 @@ class SinkWireSpec extends SparkSpec {
           "1.2.3.4", "2001:0db8:0000:0000:0000:0000:0000:0001"),
         (2, ("y", -5), Seq.empty[(String, Int)], "255.0.0.1", "::1"))
         .toDF("id", "tup", "tags", "ip4", "ip6")
-      Seq("JSONEachRow", "RowBinary", "Native").foreach { fmt =>
+      val tcp = new MiniClickHouseTcpServer(ch)
+      tcp.start()
+      try Seq("JSONEachRow", "Native", "tcp").foreach { fmt =>
         val table = s"tn_${fmt.toLowerCase}"
         ch.createTable("default", table, schema)
-        val c = cfg(ch, table, m).copy(httpFormat = fmt)
-        assert(ClickHouseSink.validateAgainstTable(c).isRight)
+        val c =
+          if (fmt == "tcp") cfg(ch, table, m).copy(url = tcp.endpoint)
+          else cfg(ch, table, m).copy(httpFormat = fmt)
+        if (fmt != "tcp") assert(ClickHouseSink.validateAgainstTable(c).isRight)
         ClickHouseSink.writeBatch(c)(df)
         assert(ch.rowCount("default", table) == 2, s"format $fmt")
         val rows = ch.rows("default", table).map(r => r("id") -> r).toMap
@@ -954,7 +913,7 @@ class SinkWireSpec extends SparkSpec {
         assert(r2("tup") == Map("a" -> "y", "n" -> BigInt(-5)), s"format $fmt")
         assert(r2("tags") == Vector.empty, s"format $fmt")
         assert(r2("ip4") == "255.0.0.1" && r2("ip6") == "::1", s"format $fmt")
-      }
+      } finally tcp.stop()
     }
   }
 
@@ -978,24 +937,29 @@ class SinkWireSpec extends SparkSpec {
 
   test("malformed IP literal dead-letters alone with the server's 441 on both binary legs") {
     withServer() { ch =>
-      Seq("RowBinary", "Native").foreach { fmt =>
-        val table = s"ip_${fmt.toLowerCase}"
+      val tcp = new MiniClickHouseTcpServer(ch)
+      tcp.start()
+      val types = Map("id" -> "Int32", "addr" -> "IPv6")
+      try Seq("http", "tcp").foreach { fmt =>
+        val table = s"ip_$fmt"
         ch.createTable("default", table, Seq("id" -> "Int32", "addr" -> "IPv6"))
-        val hc = ClickHouseHttp.Config(ch.endpoint, "default", table,
-          format = fmt,
-          columnTypes = Map("id" -> "Int32", "addr" -> "IPv6"))
+        val isolating =
+          if (fmt == "http") ClickHouseHttp.writeIsolating(ClickHouseHttp.Config(ch.endpoint,
+            "default", table, format = "Native", columnTypes = types)) _
+          else ClickHouseNativeTcp.writeIsolating(ClickHouseNativeTcp.parseEndpoint(tcp.endpoint,
+            cfg(ch, table, Nil)).copy(columnTypes = types)) _
         // no mapper in front: the bad literal reaches the ENCODER raw —
         // client-side parse rejects that row alone, the rest land
         val df = Seq((1, "::1"), (2, "not-an-ip"), (3, "1.2.3.4"))
           .toDF("id", "addr").coalesce(1)
-        val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
+        val failed = isolating(df).collect().toSeq
         assert(ch.rowCount("default", table) == 2, s"format $fmt")
         // a plain v4 literal maps into ::ffff: form, as the server parses it
         assert(ch.rows("default", table).map(_("addr")).toSet ==
           Set("::1", "::ffff:1.2.3.4"), s"format $fmt")
         assert(failed.size == 1 && failed.head._2.contains("Code: 441"), s"format $fmt")
         assert(failed.head._1.contains("not-an-ip"), s"format $fmt")
-      }
+      } finally tcp.stop()
     }
   }
 
