@@ -10,15 +10,6 @@ object ApiMain {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val dlqRoot = args.drop(1).headOption.orElse(sys.env.get("GRAFT_DLQ_ROOT"))
     val spark = graft.LocalSession()
-    // RocksDB state store: stateful operators (dedup TTL state, temporal
-    // join buffers) keep state off-heap/on-disk instead of on the JVM
-    // heap — the production default for long-TTL, hot-key state at scale
-    // (HDFSBackedStateStore holds every key in executor memory).
-    // Compatibility with our flatMapGroupsWithState operators is asserted
-    // in DedupSpec/JoinSpec. A runtime SQL conf: it applies to every query
-    // started after this line.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val server = new ApiServer(spark, new PipelineService(spark, dlqRoot))
     val bound = server.start(port)
     println(s"graft api listening on 127.0.0.1:$bound")

@@ -129,7 +129,8 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
       if (d.status == Running) Left(s"pipeline $id already running")
       else {
         try {
-          val q = sink(PipelineCompiler.streaming(d.config, source))
+          val out = PipelineCompiler.streaming(d.config, source)
+          val q = withStateStore(spark)(sink(out))
           registry.put(id, d.copy(query = Some(q), status = Running,
             starter = Some((source, sink))))
           Right(())
@@ -282,14 +283,14 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     * it on the pipeline so stop/terminate halt it with the main query. */
   private def attachValidationDlq(id: String, bad: DataFrame): Unit = {
     val dlqFn = dlqOf(id)
-    val q = bad.writeStream
+    val w = bad.writeStream
       .option("checkpointLocation", s"${checkpointOf(id)}_validation_dlq")
       .foreachBatch { (b: DataFrame, _: Long) =>
         dlqFn(Dlq.envelope("ingestor",
           "failed to validate data against the declared schema")(
           b.withColumnRenamed("__raw", "raw")))
       }
-      .start()
+    val q = withStateStore(spark)(w.start())
     registry.computeIfPresent(id, (_, dd) => dd.copy(sideQueries = dd.sideQueries :+ q))
     ()
   }
@@ -331,8 +332,9 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
               ((sid, good), bad)
             }
             val sources = built.map(_._1).toMap
-            val q = sinkAttach(PipelineCompiler.streamingJoin(cfg, sources),
-              chConfigOf(sc), checkpointOf(id), dlqOf(id)).start()
+            val w = sinkAttach(PipelineCompiler.streamingJoin(cfg, sources),
+              chConfigOf(sc), checkpointOf(id), dlqOf(id))
+            val q = withStateStore(spark)(w.start())
             registry.put(id, d.copy(query = Some(q), status = Running, starter = None))
             val bads = built.flatMap(_._2)
             if (bads.nonEmpty)
@@ -628,6 +630,33 @@ object PipelineService {
 
   val DefaultResources: Map[String, Resources] =
     ComponentNames.map(_ -> Resources()).toMap
+
+  private val StateStoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val StateStoreLock = new Object
+
+  /** Run `start` (which starts streaming queries) with the session's state
+    * store set to RocksDB, then restore the session's previous value. The
+    * one place the engine picks its state store: dedup TTL keys and
+    * temporal-join buffers live in RocksDB, off the JVM heap, instead of
+    * in the HDFS-backed default's executor-heap maps (SURVEY.md maps the
+    * reference's on-disk BadgerDB to this store).
+    *
+    * Scoping to the start is enough: a query copies the session conf when
+    * it is constructed, and its offset log records the provider, so a
+    * running query keeps RocksDB and a restart reads its provider back
+    * from the checkpoint (one written under the HDFS-backed store restarts
+    * under it). The lock keeps two starts from interleaving their
+    * set/restore pairs; it is reentrant, so nested starts restore in
+    * order. */
+  private[graft] def withStateStore[A](spark: SparkSession)(start: => A): A =
+    StateStoreLock.synchronized {
+      val prev = spark.conf.getAll.get(StateStoreKey)
+      spark.conf.set(StateStoreKey, RocksDb)
+      try start
+      finally prev.fold(spark.conf.unset(StateStoreKey))(spark.conf.set(StateStoreKey, _))
+    }
 
   final case class Deployed(
     config: PipelineConfig,

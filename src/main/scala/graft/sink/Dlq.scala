@@ -1,8 +1,10 @@
 package graft.sink
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Dead-letter queue envelope — every stage wraps failed rows as
   * `{component, error, original_message}` (reference
@@ -22,7 +24,15 @@ object Dlq {
       // resolve as a nested field reference
       to_json(struct(df.columns.map(n =>
         df.col(s"`${n.replace("`", "``")}`")): _*)).as("original_message"),
-      current_timestamp().as("failed_at"))
+      failedAt())
+
+  /** The envelope's failure time, one instant per envelope, bound through a
+    * UDF: `current_timestamp()` folds to a literal that generated code
+    * inlines, so every batch would compile new classes. */
+  private def failedAt(): Column = {
+    val at = java.sql.Timestamp.from(java.time.Instant.now())
+    udf(() => at).apply().as("failed_at")
+  }
 
   /** Envelope a DISTRIBUTED failure set — (jsonRow, serverError) pairs
     * from the HTTP leg's poison-row isolation, each row carrying ITS OWN
@@ -38,7 +48,7 @@ object Dlq {
       lit(component).as("component"),
       col("error"),
       col("original_message"),
-      current_timestamp().as("failed_at"))
+      failedAt())
 
   /** Produce a DLQ frame to a Kafka topic via `format("graft-kafka")` —
     * the reference's actual DLQ shape (a stream, not files:
@@ -59,17 +69,33 @@ object Dlq {
     * total column order (deterministic); appends to one DLQ path are
     * serialized through the owning query's foreachBatch, which is what
     * makes the read-stamp-advance below safe. An empty frame appends
-    * nothing and leaves the side file as it is. */
+    * nothing and leaves the side file as it is.
+    *
+    * The frame is computed once: its rows are persisted executor-side
+    * (MEMORY_AND_DISK, an RDD so no plan registers with the cache
+    * manager) and counted, one job with no shuffle. A non-empty set is
+    * then sorted and stamped in one task over the persisted rows, the
+    * counter kept in the task: a per-batch `seq` literal would compile
+    * new generated classes every batch. */
   def writeParquet(path: String)(df: DataFrame): Unit = synchronized {
-    val n = df.count()
-    if (n > 0) {
-      val start = readSeq(path)
-      val w = Window.orderBy(df.columns.map(col): _*)
-      df.withColumn("seq", row_number().over(w).cast("long") + lit(start - 1))
-        .write.mode("append").parquet(path)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-      java.nio.file.Files.write(seqPath(path), (start + n).toString.getBytes("UTF-8"))
-    }
+    val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = rows.count()
+      if (n > 0) {
+        val start = readSeq(path)
+        val spark = df.sparkSession
+        val sorted = spark.createDataFrame(rows, df.schema).coalesce(1)
+          .sortWithinPartitions(df.columns.map(c => col(s"`${c.replace("`", "``")}`")): _*)
+        val stamped = sorted.rdd.mapPartitions { it =>
+          var seq = start - 1
+          it.map { r => seq += 1; Row.fromSeq(r.toSeq :+ seq) }
+        }
+        spark.createDataFrame(stamped, df.schema.add("seq", LongType, nullable = false))
+          .write.mode("append").parquet(path)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+        java.nio.file.Files.write(seqPath(path), (start + n).toString.getBytes("UTF-8"))
+      }
+    } finally { rows.unpersist(); () }
   }
 
   /** One-time migration of an externally-written, seq-less DLQ directory:

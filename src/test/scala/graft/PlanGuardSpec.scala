@@ -72,4 +72,16 @@ class PlanGuardSpec extends SparkSpec {
       .map(_.getFileName.toString).toSeq
     assert(builders == Seq("LocalSession.scala"))
   }
+
+  /** One state-store choice: every pipeline query starts on the provider
+    * [[graft.pipeline.PipelineService.withStateStore]] picks, so the
+    * service and the benches run the same store. */
+  test("RocksDBStateStoreProvider appears in src/main only in PipelineService.scala") {
+    val pickers = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("RocksDBStateStoreProvider"))
+      .map(_.getFileName.toString).toSeq
+    assert(pickers == Seq("PipelineService.scala"))
+  }
 }

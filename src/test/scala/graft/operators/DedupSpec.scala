@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.pipeline.PipelineService
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -94,11 +95,7 @@ class DedupSpec extends SparkSpec {
   test("exact streaming dedup runs under the RocksDB state store (production provider)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    PipelineService.withStateStore(spark) {
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       val mem = MemoryStream[(String, java.sql.Timestamp, Long)]
       val q = DedupOp.windowedStreamingExact(Seq("k"), "ts", 600000L)(
@@ -113,11 +110,6 @@ class DedupSpec extends SparkSpec {
       q.stop()
       val got = spark.table("dedup_rocksdb_out").collect().map(_.getLong(2)).sorted.toSeq
       assert(got == Seq(1L, 3L))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.pipeline.PipelineService
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -93,11 +94,7 @@ class FunnelSpec extends SparkSpec {
   test("streaming funnel runs under the RocksDB state store (production provider)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    PipelineService.withStateStore(spark) {
       val ms = MemoryStream[(Long, Long, String)]
       ms.addData((1L, 1000L, "a"), (1L, 2000L, "b"), (1L, 3000L, "c"),
         (2L, 1000L, "b")) // no step-1 → no row for key 2
@@ -116,11 +113,6 @@ class FunnelSpec extends SparkSpec {
       val got = spark.table(qn).filter(col("k") =!= -1L)
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
       assert(got == Seq((1L, 3)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.pipeline.PipelineService
 import AsOfJoin.Projection
 
 class JoinSpec extends SparkSpec {
@@ -120,11 +121,7 @@ class JoinSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    PipelineService.withStateStore(spark) {
       val leftMem = MemoryStream[(Long, String, java.sql.Timestamp)]
       val rightMem = MemoryStream[(Long, String, java.sql.Timestamp)]
       val cfg = TemporalJoin.Config(
@@ -148,11 +145,6 @@ class JoinSpec extends SparkSpec {
       val got = spark.table("tj_rocksdb_out").collect()
         .map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
       assert(got == Seq((1L, 100L), (2L, 200L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

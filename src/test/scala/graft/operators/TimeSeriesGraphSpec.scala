@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.data.Bpe
+import graft.pipeline.PipelineService
 
 /** TimeSeries (gap fill, SCD2), Graph (triangles), and Bpe (merge
   * learning) — semantics pinned against hand-computable fixtures and
@@ -351,13 +352,9 @@ class TimeSeriesGraphSpec extends SparkSpec {
   test("streaming CUSUM buffer survives a RocksDB-backed restart from checkpoint") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = java.nio.file.Files.createTempDirectory("graft_cusum_ckpt").toString
     val (checkpoint, outDir) = (s"$base/ckpt", s"$base/out")
-    try {
+    PipelineService.withStateStore(spark) {
       val ms = MemoryStream[(Long, Long, Long)]
       val df = ms.toDF.toDF("k", "tus", "v")
         .select(col("k"), timestamp_micros(col("tus")).as("ts"),
@@ -382,11 +379,6 @@ class TimeSeriesGraphSpec extends SparkSpec {
         .collect().map(r => (r.getLong(1), r.getLong(3))).toSeq.sorted
       assert(got == Seq((1000000L, 15L), (2000000L, 10L), (3000000L, 30L)),
         s"pre-restart buffer lost or wrong replay: $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

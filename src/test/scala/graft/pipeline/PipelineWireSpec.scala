@@ -228,10 +228,12 @@ class PipelineWireSpec extends SparkSpec {
       assert(started_svc.isRight, started_svc.swap.getOrElse(""))
       drainNew()
       try {
+        // a multiset: a row inserted twice must fail the check
         val rows = ch.rows("default", "otel_logs")
-          .map(r => (r("severity_text"), r("body"), r("severity_number"))).toSet
-        assert(rows == Set(("INFO", "started", BigInt(9)),
-          ("ERROR", "boom", BigInt(17))))
+          .map(r => (r("severity_text"), r("body"), r("severity_number")))
+          .groupMapReduce(identity)(_ => 1)(_ + _)
+        assert(rows == Map(("INFO", "started", BigInt(9)) -> 1,
+          ("ERROR", "boom", BigInt(17)) -> 1))
       } finally { svc.terminate(id); () }
     } finally { receiver.stop(); ch.stop() }
   }
