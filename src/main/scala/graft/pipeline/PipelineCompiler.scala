@@ -43,11 +43,7 @@ object PipelineCompiler {
       val deduped = t.deduplication.filter(_.enabled).fold(pruned) { d =>
         applyDedup(pruned, d)
       }
-      val transformed = cfg.transform.fold(deduped) { tr =>
-        TransformOp(tr.rules.map(r =>
-          TransformOp.Rule(r.expression, r.outputName, r.outputType)))(deduped)
-      }
-      t.name -> transformed
+      t.name -> transform(cfg, deduped)
     }.toMap
 
     val joined: DataFrame = cfg.join.filter(_.enabled) match {
@@ -60,15 +56,10 @@ object PipelineCompiler {
         val windowNs = math.max(
           PipelineConfig.windowMillis(left.timeWindow),
           PipelineConfig.windowMillis(right.timeWindow)) * 1000000L
-        def outs(id: String, df: DataFrame) = {
-          val ps = j.projections.filter(_.sourceId == id)
-          if (ps.nonEmpty) ps.map(p => AsOfJoin.Projection(p.field, p.outputName))
-          else df.columns.toSeq.map(c => AsOfJoin.Projection(c, c))
-        }
         AsOfJoin.sortMerge(
           lDf.withColumn("__ts_ns", lTs), rDf.withColumn("__ts_ns", rTs),
           left.joinKey, right.joinKey, "__ts_ns", "__ts_ns", windowNs,
-          outs(left.sourceId, lDf), outs(right.sourceId, rDf))
+          projections(j, left.sourceId, lDf), projections(j, right.sourceId, rDf))
     }
 
     cfg.sink.filter(_.tableMapping.nonEmpty).fold(joined) { s =>
@@ -117,9 +108,6 @@ object PipelineCompiler {
     }
   }
 
-  /** Streaming compile for a single-source pipeline: same chain with
-    * streaming dedup; returns the transformed streaming DataFrame (attach a
-    * sink with ClickHouseSink.attach). */
   /** Streaming dedup needs an event-time column for its watermark. The
     * reference's dedup configs declare none — its windows run on ARRIVAL
     * time — so when the frame carries the Kafka record `timestamp` (config
@@ -131,18 +119,33 @@ object PipelineCompiler {
       .getOrElse(throw new IllegalArgumentException(
         "streaming dedup requires time_field (or a kafka 'timestamp' column)"))
 
-  def streaming(cfg: PipelineConfig, source: DataFrame): DataFrame = {
-    val t = cfg.source.topics.head
-    val filtered = cfg.filter.fold(source)(f => FilterOp(f.expression)(source))
-    val deduped = t.deduplication.filter(_.enabled).fold(filtered) { d =>
-      val tf = dedupTimeField(d, filtered)
+  /** The streaming dedup stage of one source branch, when enabled. */
+  private def streamingDedup(d: Option[DedupConfig], df: DataFrame): DataFrame =
+    d.filter(_.enabled).fold(df) { d =>
       val win = PipelineConfig.windowMillis(d.timeWindow)
-      DedupOp.windowedStreaming(Seq(d.idField), tf, s"$win milliseconds")(filtered)
+      DedupOp.windowedStreaming(Seq(d.idField), dedupTimeField(d, df), s"$win milliseconds")(df)
     }
-    cfg.transform.fold(deduped) { tr =>
+
+  private def transform(cfg: PipelineConfig, df: DataFrame): DataFrame =
+    cfg.transform.fold(df) { tr =>
       TransformOp(tr.rules.map(r =>
-        TransformOp.Rule(r.expression, r.outputName, r.outputType)))(deduped)
+        TransformOp.Rule(r.expression, r.outputName, r.outputType)))(df)
     }
+
+  /** A join side's output columns: its configured projections, or every
+    * column of `df` when it has none. */
+  private def projections(j: JoinConfig, id: String, df: DataFrame): Seq[AsOfJoin.Projection] = {
+    val ps = j.projections.filter(_.sourceId == id)
+    if (ps.nonEmpty) ps.map(p => AsOfJoin.Projection(p.field, p.outputName))
+    else df.columns.toSeq.map(c => AsOfJoin.Projection(c, c))
+  }
+
+  /** Streaming compile for a single-source pipeline: filter → streaming
+    * dedup → transform; returns the streaming DataFrame a sink attaches
+    * to. The filter always applies. */
+  def streaming(cfg: PipelineConfig, source: DataFrame): DataFrame = {
+    val filtered = cfg.filter.fold(source)(f => FilterOp(f.expression)(source))
+    transform(cfg, streamingDedup(cfg.source.topics.head.deduplication, filtered))
   }
 
   /** Streaming compile for a JOIN pipeline (two sources): per-source
@@ -166,19 +169,9 @@ object PipelineCompiler {
       val filtered = cfg.filter
         .filter(f => ExprCompiler.validate(f.expression, df0.schema).isRight)
         .fold(df0)(f => FilterOp(f.expression)(df0))
-      cfg.source.topics.find(_.name == id).flatMap(_.deduplication)
-        .filter(_.enabled).fold(filtered) { d =>
-          val tf = dedupTimeField(d, filtered)
-          val win = PipelineConfig.windowMillis(d.timeWindow)
-          DedupOp.windowedStreaming(Seq(d.idField), tf, s"$win milliseconds")(filtered)
-        }
+      streamingDedup(cfg.source.topics.find(_.name == id).flatMap(_.deduplication), filtered)
     }
 
-    def outs(id: String, df: DataFrame) = {
-      val ps = j.projections.filter(_.sourceId == id)
-      if (ps.nonEmpty) ps.map(p => AsOfJoin.Projection(p.field, p.outputName))
-      else df.columns.toSeq.map(c => AsOfJoin.Projection(c, c))
-    }
     // no time_field declared (the reference's demo join configs have none:
     // its buffer TTLs run on ARRIVAL time, the KV entry's age,
     // temporal.go:119-147) → stamp ingestion time and TTL on that. The
@@ -190,7 +183,7 @@ object PipelineCompiler {
     }
 
     val (lDf0, rDf0) = (branch(left.sourceId), branch(right.sourceId))
-    val (lOut, rOut) = (outs(left.sourceId, lDf0), outs(right.sourceId, rDf0))
+    val (lOut, rOut) = (projections(j, left.sourceId, lDf0), projections(j, right.sourceId, rDf0))
     val (lDf, lTs) = withTs(left, lDf0)
     val (rDf, rTs) = withTs(right, rDf0)
     TemporalJoin(lDf, rDf, TemporalJoin.Config(

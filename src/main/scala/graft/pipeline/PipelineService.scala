@@ -120,106 +120,116 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     }
   }
 
-  /** Start (or resume): compile against the source and hand the transformed
-    * stream to `sink`, which starts the StreamingQuery (checkpoint choice
-    * lives with the sink — restart from the same checkpoint = resume).
-    * The factories are retained so [[resume]] can restart over HTTP. */
-  def start(id: String, source: DataFrame, sink: DataFrame => StreamingQuery): Either[String, Unit] =
-    withPipeline(id) { d =>
-      if (d.status == Running) Left(s"pipeline $id already running")
-      else {
-        try {
-          val out = PipelineCompiler.streaming(d.config, source)
-          val q = withStateStore(spark)(sink(out))
-          registry.put(id, d.copy(query = Some(q), status = Running,
-            starter = Some((source, sink))))
-          Right(())
-        } catch {
-          case e: Exception =>
-            registry.put(id, d.copy(status = Failed))
-            Left(Option(e.getMessage).getOrElse(e.toString))
-        }
-      }
-    }
-
-  /** Start a pipeline purely from its STORED config (reference: create →
-    * start is config-only; pod startup is the operator's job — here the
-    * "operator" is this method): the source (Kafka via the source factory,
-    * or an OTLP receiver spool read as a schema-pinned file stream) and
-    * ClickHouse sink are built from the registered
-    * `SourceConfig`/`SinkConfig`, the DLQ is the pipeline's own
-    * `<dlqRoot>/<id>` queue, and the checkpoint lives under
-    * `<checkpointRoot>/<id>` so stop→resume keeps offset/state continuity.
-    * Join pipelines route to [[startJoinFromConfig]], which builds one
-    * source stream per join side. */
+  /** Start a pipeline from its STORED config — the one way a pipeline
+    * starts (reference: create → start is config-only; pod startup is the
+    * operator's job — here the "operator" is this method). In order:
+    *
+    *  1. the sink must be configured with a URL;
+    *  2. the topics read: the first topic, or each join side's topic;
+    *  3. one source per topic — Kafka through the source factory, whose
+    *     raw frames [[parseIfRaw]] parses, or for a plain pipeline the
+    *     OTLP receiver spool read as a schema-pinned file stream;
+    *  4. an HTTP sink's mapping is checked against the live table;
+    *  5. the compiled stream starts as the sink query, checkpointed at
+    *     `<checkpointRoot>/<id>`, dead-lettering to `<dlqRoot>/<id>`;
+    *  6. the corrupt rows of every source feed one validation-DLQ query.
+    *
+    * A fault past step 2 stops whatever this call started and records
+    * Failed. Nothing from an earlier run is reused: stop → start (or
+    * [[resume]]) rebuilds both queries from the config and restarts them
+    * from their checkpoints, so an edit made while stopped applies. */
   def startFromConfig(id: String): Either[String, Unit] = withPipeline(id) { d =>
     val cfg = d.config
-    val kind = cfg.source.kind.getOrElse("kafka")
-    if (cfg.join.exists(_.enabled)) startJoinFromConfig(id, d)
-    else (cfg.source.topics.headOption, cfg.sink) match {
-      case (None, _) => Left("source: no topics configured")
-      case (_, None) => Left("sink: not configured")
-      case (Some(topic), Some(sc)) if sc.url.isEmpty =>
-        Left("sink: url required for config start")
-      case (Some(topic), Some(sc)) =>
-        val sourceE: Either[String, DataFrame] = kind match {
-          case "kafka" =>
-            if (cfg.source.brokers.forall(_.isEmpty))
-              Left("source: brokers required for config start")
-            else Right(sourceReader(spark, KafkaSource.Config(
-              brokers = cfg.source.brokers.get,
-              topic = topic.name,
-              consumerGroup = topic.consumerGroup.getOrElse(s"graft-$id"))))
-          // "otlp.metrics"/"otlp.logs"/"otlp.traces" are the reference's
-          // typed OTLP source spellings (its 5g demo uses otlp.metrics) —
-          // all read the receiver's spool for their topic
-          case k if k == "otlp" || k.startsWith("otlp.") => otlpSpoolRoot match {
-            case None => Left("source: otlp spool root not configured")
-            case Some(root) =>
-              val dir = s"$root/${topic.name}"
-              // file streams need an explicit schema: take it from the
-              // spool the receiver has already written
-              try {
-                val schema = spark.read.parquet(dir).schema
-                // bound each micro-batch: a spool with a deep backlog must
-                // drain incrementally, not land in one giant batch
-                Right(spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1000).parquet(dir))
-              } catch {
-                case _: Exception =>
-                  Left(s"source: no spool data at ${topic.name} yet (POST to the receiver first)")
-              }
-          }
-          case other => Left(s"config start supports kafka/otlp sources; got $other")
-        }
-        val chCfg = chConfigOf(sc)
-        // HTTP sink: validate the mapping against the LIVE table schema
-        // (DESCRIBE TABLE) before starting — a typo'd or dropped column is
-        // a config error now, not a per-batch error 16 at runtime. (jdbc:
-        // URLs skip this; the JDBC driver owns its own metadata.)
-        val schemaCheck: Either[String, Unit] =
-          if (chCfg.url.startsWith("http"))
-            ClickHouseSink.validateAgainstTable(chCfg)
+    if (d.status == Running) Left(s"pipeline $id already running")
+    else {
+      val started = scala.collection.mutable.ArrayBuffer[StreamingQuery]()
+      try {
+        for {
+          sc <- cfg.sink.toRight("sink: not configured")
+            .filterOrElse(_.url.nonEmpty, "sink: url required for config start")
+          topics <- topicsRead(cfg)
+          sources <- sourcesOf(id, cfg, topics)
+          chCfg = chConfigOf(sc)
+          // HTTP sink: validate the mapping against the LIVE table schema
+          // (DESCRIBE TABLE) before starting — a typo'd or dropped column
+          // is a config error now, not a per-batch error 16 at runtime.
+          // (jdbc: URLs skip this; the JDBC driver owns its own metadata.)
+          _ <- if (!chCfg.url.startsWith("http")) Right(())
+            else ClickHouseSink.validateAgainstTable(chCfg)
               .left.map(e => s"sink schema validation: $e")
-          else Right(())
-        schemaCheck.flatMap(_ => sourceE).flatMap { src0 =>
-          val (source, badOpt) =
-            if (kind == "kafka") parseIfRaw(src0, topic, cfg) else (src0, None)
-          start(id, source,
-            df => sinkAttach(df, chCfg, checkpointOf(id), dlqOf(id)).start())
-            .map { ok =>
-              badOpt.foreach { bad =>
-                attachValidationDlq(id, bad)
-                // with a companion stream in play, resume must rebuild BOTH
-                // queries from config — a retained single-query starter
-                // would silently drop the validation DLQ on restart
-                registry.computeIfPresent(id, (_, dd) => dd.copy(starter = None))
-              }
-              ok
-            }
+        } yield {
+          val goods = sources.map(_._1)
+          val out =
+            if (cfg.join.exists(_.enabled))
+              PipelineCompiler.streamingJoin(cfg, topics.map(_.name).zip(goods).toMap)
+            else PipelineCompiler.streaming(cfg, goods.head)
+          // the sink query starts first, then its validation-DLQ companion
+          started += withStateStore(spark)(
+            sinkAttach(out, chCfg, checkpointOf(id), dlqOf(id)).start())
+          val bads = sources.flatMap(_._2)
+          if (bads.nonEmpty)
+            started += withStateStore(spark)(validationDlq(id, bads.reduce(_.unionByName(_))).start())
+          registry.put(id, d.copy(query = started.headOption,
+            sideQueries = started.drop(1).toList, status = Running))
+          ()
         }
+      } catch {
+        case e: Exception =>
+          started.foreach(q => try q.stop() catch { case _: Exception => () })
+          registry.put(id, d.copy(status = Failed))
+          Left(Option(e.getMessage).getOrElse(e.toString))
+      }
     }
   }
+
+  /** The topics a config start reads: the first topic, or the topic of
+    * each join side (join.sources reference source topics by id — every
+    * side needs one, since its consumer group and dedup live there). */
+  private def topicsRead(cfg: PipelineConfig): Either[String, Seq[TopicConfig]] =
+    cfg.join.filter(_.enabled) match {
+      case None => cfg.source.topics.headOption.map(Seq(_)).toRight("source: no topics configured")
+      case Some(j) =>
+        val sides = j.sources.map(s => s.sourceId -> cfg.source.topics.find(_.name == s.sourceId))
+        val missing = sides.collect { case (sid, None) => sid }
+        if (missing.nonEmpty) Left(s"join: no source topic configured for ${missing.mkString(", ")}")
+        else Right(sides.flatMap(_._2))
+    }
+
+  /** One (valid rows, corrupt rows) source per topic. */
+  private def sourcesOf(id: String, cfg: PipelineConfig, topics: Seq[TopicConfig])
+      : Either[String, Seq[(DataFrame, Option[DataFrame])]] =
+    cfg.source.kind.getOrElse("kafka") match {
+      case "kafka" =>
+        if (cfg.source.brokers.forall(_.isEmpty)) Left("source: brokers required for config start")
+        else Right(topics.map(t => parseIfRaw(sourceReader(spark, KafkaSource.Config(
+          brokers = cfg.source.brokers.get,
+          topic = t.name,
+          consumerGroup = t.consumerGroup.getOrElse(s"graft-$id"))), t, cfg)))
+      case k if cfg.join.exists(_.enabled) =>
+        Left(s"config start supports kafka sources for join pipelines; got $k")
+      // "otlp.metrics"/"otlp.logs"/"otlp.traces" are the reference's typed
+      // OTLP source spellings (its 5g demo uses otlp.metrics) — all read
+      // the receiver's spool for their topic
+      case k if k == "otlp" || k.startsWith("otlp.") => otlpSpoolRoot match {
+        case None => Left("source: otlp spool root not configured")
+        case Some(root) =>
+          val topic = topics.head.name
+          val dir = s"$root/$topic"
+          // file streams need an explicit schema: take it from the spool
+          // the receiver has already written
+          try {
+            val schema = spark.read.parquet(dir).schema
+            // bound each micro-batch: a spool with a deep backlog must
+            // drain incrementally, not land in one giant batch
+            Right(Seq((spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1000).parquet(dir), None)))
+          } catch {
+            case _: Exception =>
+              Left(s"source: no spool data at $topic yet (POST to the receiver first)")
+          }
+      }
+      case other => Left(s"config start supports kafka/otlp sources; got $other")
+    }
 
   private def chConfigOf(sc: SinkConfig): ClickHouseSink.Config =
     ClickHouseSink.Config(
@@ -279,98 +289,24 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     }
   }
 
-  /** Start the validation-DLQ companion stream for `bad` rows and record
-    * it on the pipeline so stop/terminate halt it with the main query. */
-  private def attachValidationDlq(id: String, bad: DataFrame): Unit = {
+  /** The validation-DLQ companion stream for `bad` rows: each batch lands
+    * in the pipeline's DLQ under the ingestor component. */
+  private def validationDlq(id: String, bad: DataFrame): DataStreamWriter[Row] = {
     val dlqFn = dlqOf(id)
-    val w = bad.writeStream
+    bad.writeStream
       .option("checkpointLocation", s"${checkpointOf(id)}_validation_dlq")
       .foreachBatch { (b: DataFrame, _: Long) =>
         dlqFn(Dlq.envelope("ingestor",
           "failed to validate data against the declared schema")(
           b.withColumnRenamed("__raw", "raw")))
       }
-    val q = withStateStore(spark)(w.start())
-    registry.computeIfPresent(id, (_, dd) => dd.copy(sideQueries = dd.sideQueries :+ q))
-    ()
   }
 
-  /** Config-only start for a JOIN pipeline (the reference's
-    * tests/features/join/join.feature shape: two kafka source topics, a
-    * temporal join, a ClickHouse sink): one source stream per join side via
-    * the source factory, compiled through
-    * [[PipelineCompiler.streamingJoin]]. No starter is retained — resume
-    * goes back through this method, rebuilding both sources from config. */
-  private def startJoinFromConfig(id: String, d: Deployed): Either[String, Unit] = {
-    val cfg = d.config
-    val kind = cfg.source.kind.getOrElse("kafka")
-    val j = cfg.join.get
-    cfg.sink match {
-      case None => Left("sink: not configured")
-      case Some(sc) if sc.url.isEmpty => Left("sink: url required for config start")
-      case Some(sc) =>
-        if (kind != "kafka")
-          Left(s"config start supports kafka sources for join pipelines; got $kind")
-        else if (cfg.source.brokers.forall(_.isEmpty))
-          Left("source: brokers required for config start")
-        else {
-          // join.sources reference source topics by id — every side needs
-          // a configured topic (consumer group and dedup live there)
-          val wanted = j.sources.map(_.sourceId)
-          val missing = wanted.filterNot(sid => cfg.source.topics.exists(_.name == sid))
-          if (missing.nonEmpty)
-            Left(s"join: no source topic configured for ${missing.mkString(", ")}")
-          else if (d.status == Running) Left(s"pipeline $id already running")
-          else try {
-            val built = wanted.map { sid =>
-              val t = cfg.source.topics.find(_.name == sid).get
-              val raw = sourceReader(spark, KafkaSource.Config(
-                brokers = cfg.source.brokers.get,
-                topic = t.name,
-                consumerGroup = t.consumerGroup.getOrElse(s"graft-$id")))
-              val (good, bad) = parseIfRaw(raw, t, cfg)
-              ((sid, good), bad)
-            }
-            val sources = built.map(_._1).toMap
-            val w = sinkAttach(PipelineCompiler.streamingJoin(cfg, sources),
-              chConfigOf(sc), checkpointOf(id), dlqOf(id))
-            val q = withStateStore(spark)(w.start())
-            registry.put(id, d.copy(query = Some(q), status = Running, starter = None))
-            val bads = built.flatMap(_._2)
-            if (bads.nonEmpty)
-              attachValidationDlq(id, bads.reduce(_.unionByName(_)))
-            Right(())
-          } catch {
-            case e: Exception =>
-              // the join query may already be RUNNING when a later step
-              // (e.g. the validation-DLQ attach) throws — overwriting the
-              // registry with the stale pre-start snapshot (query=None)
-              // would leak an unstoppable stream; stop it and keep the
-              // CURRENT entry's query reference
-              val current = Option(registry.get(id)).getOrElse(d)
-              current.query.foreach(q => try q.stop() catch { case _: Throwable => () })
-              registry.put(id, current.copy(status = Failed))
-              Left(Option(e.getMessage).getOrElse(e.toString))
-          }
-        }
-    }
-  }
-
-  /** Resume a stopped pipeline from its retained source/sink factories
-    * (reference: resume annotation restarts the pods from stored config;
-    * here the sink's checkpoint carries the offset/state continuity). */
-  def resume(id: String): Either[String, Unit] = withPipeline(id) { d =>
-    d.starter match {
-      case None =>
-        // no retained factories (e.g. registry reloaded from the durable
-        // store after a restart): rebuild them from the stored config
-        if (d.status == Running) Left(s"pipeline $id already running")
-        else startFromConfig(id)
-      case Some((source, sink)) =>
-        if (d.status == Running) Left(s"pipeline $id already running")
-        else start(id, source, sink)
-    }
-  }
+  /** Resume a stopped pipeline: the config start, from the checkpoints its
+    * earlier run left (reference: the resume annotation restarts the pods
+    * from stored config; here each query's checkpoint carries the
+    * offset/state continuity). */
+  def resume(id: String): Either[String, Unit] = startFromConfig(id)
 
   /** Edit: replace the config of a non-running pipeline (reference edit
     * annotation; the next start/resume compiles the new config). */
@@ -662,7 +598,6 @@ object PipelineService {
     config: PipelineConfig,
     query: Option[StreamingQuery],
     status: Status,
-    starter: Option[(DataFrame, DataFrame => StreamingQuery)] = None,
     resources: Map[String, Resources] = DefaultResources,
     // companion queries owned by the pipeline (e.g. the validation-DLQ
     // stream a raw-Kafka config start attaches); stopped with the main one

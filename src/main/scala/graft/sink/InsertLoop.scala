@@ -22,10 +22,11 @@ import graft.types.{CHType, NativeEncoder}
   *    replays a slab the server rejects with a row-data fault row by row,
   *    dead-lettering only the rows the server turns down again.
   *
-  * Encoders and transports combine freely; [[ClickHouseHttp]] and
-  * [[ClickHouseNativeTcp]] only pick which. Every leg therefore slabs,
-  * replays and words its dead-letter errors the same way. */
-private[sink] object InsertLoop {
+  * Encoders and transports combine freely; [[ClickHouseHttp]],
+  * [[ClickHouseNativeTcp]] and the `graft-clickhouse` DataSource write only
+  * pick which. Every leg therefore slabs, replays and words its
+  * dead-letter errors the same way. */
+private[graft] object InsertLoop {
 
   /** One INSERT body holding `rows` encoded rows, plus the rows the encoder
     * itself turned down while building it, as (JSON text, error). Row `i`

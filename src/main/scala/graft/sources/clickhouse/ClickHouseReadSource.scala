@@ -9,11 +9,12 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sink.ClickHouseHttp
+import graft.sink.{ClickHouseHttp, InsertLoop}
 import graft.types.{CHType, NativeDecoder}
 
 /** ClickHouse READ-side source (`spark.read.format("graft-clickhouse")`) —
@@ -604,101 +605,48 @@ private[clickhouse] final class ChTable(opts: Map[String, String], schema0: Stru
       opts.getOrElse("table", "?")
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.V1_BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ChScanBuilder(opts ++ options.asScala, schema0)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new ChWriteBuilder(opts ++ info.options().asScala, info.schema(), schema0)
 }
 
-/** DSv2 BATCH WRITE (`df.write.format("graft-clickhouse").mode("append")`):
-  * each partition task streams its rows as `FORMAT Native` blocks through
-  * the same encoder and POST path as [[graft.sink.ClickHouseSink]]'s HTTP
-  * leg — per-partition parallel INSERTs, slab-bounded by rows AND bytes.
+/** BATCH WRITE (`df.write.format("graft-clickhouse").mode("append")`), as
+  * a V1 fallback write: Spark hands the whole frame to one
+  * [[org.apache.spark.sql.sources.InsertableRelation]], which runs the
+  * sink's own strict [[graft.sink.InsertLoop]] over it — `FORMAT Native`
+  * slabs bounded by rows AND bytes, one POST per slab, per-partition
+  * parallel INSERTs, and a value the encoder rejects fails the write.
   * Semantics are the sink's: at-least-once per task (a retried task
   * re-POSTs its slabs; pair with `insert_deduplicate` via `settings.*`
   * options for replicated-table exactly-once). Column types come from
   * DESCRIBE TABLE at planning time, so the wire encoding always matches
-  * the live table, not a stale config. */
+  * the live table, not a stale config, and a frame column the table
+  * lacks fails the plan. */
 private[clickhouse] final class ChWriteBuilder(opts: Map[String, String], df: StructType,
                                                tableSchema: StructType)
-  extends org.apache.spark.sql.connector.write.WriteBuilder {
-  import org.apache.spark.sql.connector.write._
+  extends WriteBuilder {
 
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val c = ClickHouseReadSource.conf(opts)
-      // table types from the inferred schema's metadata when present —
-      // the write then plans with ZERO extra DESCRIBEs beyond inferSchema's
-      val server = ClickHouseReadSource.chTypesOf(tableSchema)
-        .getOrElse(ClickHouseReadSource.describe(opts, c)).toMap
-      val colTypes = df.fieldNames.toSeq.map { n =>
-        n -> server.getOrElse(n, throw new IllegalArgumentException(
-          s"column $n does not exist in ${c.database}.${c.table}"))
-      }
-      new ChBatchWrite(c, colTypes, df)
-    }
+  override def build(): V1Write = {
+    val c = ClickHouseReadSource.conf(opts)
+    // table types from the inferred schema's metadata when present —
+    // the write then plans with ZERO extra DESCRIBEs beyond inferSchema's
+    val server = ClickHouseReadSource.chTypesOf(tableSchema)
+      .getOrElse(ClickHouseReadSource.describe(opts, c)).toMap
+    val colTypes = df.fieldNames.toSeq.map { n =>
+      n -> server.getOrElse(n, throw new IllegalArgumentException(
+        s"column $n does not exist in ${c.database}.${c.table}"))
+    }.toMap
+    // built here, not in the relation, so the task closure captures only `c`
+    val http = () => new InsertLoop.Http(c)
+    val insert: InsertableRelation = (data, _) => InsertLoop.write(
+      InsertLoop.nativeSlabs(data, colTypes, c.maxRowsPerPost, c.maxBytesPerPost, isolate = false),
+      ClickHouseHttp.insertQuery(c.copy(format = "Native"), data.columns.toSeq), http)
+    new V1Write { override def toInsertableRelation: InsertableRelation = insert }
   }
 }
-
-private[clickhouse] final class ChBatchWrite(
-    c: ClickHouseHttp.Config, colTypes: Seq[(String, String)], schema: StructType)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    ChWriterFactory(c, colTypes, schema)
-  // rows POST as tasks complete (the sink's streaming-append model):
-  // commit/abort carry no global atomicity, exactly like the reference's
-  // per-batch inserts
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[clickhouse] final case class ChWriterFactory(
-    c: ClickHouseHttp.Config, colTypes: Seq[(String, String)], schema: StructType)
-  extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new ChDataWriter(c, colTypes, schema)
-}
-
-private[clickhouse] final class ChDataWriter(
-    c: ClickHouseHttp.Config, colTypes: Seq[(String, String)], schema: StructType)
-  extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  private val names = colTypes.map(_._1)
-  private val types = colTypes.map(t => CHType.parse(t._2))
-  private val query = {
-    val cc = c.copy(format = "Native")
-    ClickHouseHttp.insertQuery(cc, names)
-  }
-  private val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
-    .createToScalaConverter(schema)
-  private var builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-
-  private def flush(): Unit = if (builder.rowCount > 0) {
-    ClickHouseHttp.post(c, query, builder.build())
-    builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-  }
-
-  override def write(record: InternalRow): Unit = {
-    val row = toScala(record).asInstanceOf[org.apache.spark.sql.Row]
-    builder.tryAppend(row).foreach(err => throw new IllegalArgumentException(err))
-    if (builder.rowCount >= c.maxRowsPerPost || builder.byteSize >= c.maxBytesPerPost)
-      flush()
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    flush()
-    ChCommit
-  }
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
-}
-
-private[clickhouse] case object ChCommit
-  extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 private[clickhouse] final class ChScanBuilder(opts: Map[String, String], full: StructType)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns

@@ -84,4 +84,19 @@ class PlanGuardSpec extends SparkSpec {
       .map(_.getFileName.toString).toSeq
     assert(pickers == Seq("PipelineService.scala"))
   }
+
+  /** One INSERT loop: every ClickHouse write slabs and POSTs through
+    * [[graft.sink.InsertLoop]], so outside the files that define them the
+    * Native block builder and the HTTP POST are called only there. */
+  test("new BlockBuilder( and ClickHouseHttp.post( appear in src/main only in InsertLoop.scala") {
+    def users(call: String, definedIn: String): Seq[String] =
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+        .asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == definedIn)
+        .filter(p => call.r.findFirstIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.getFileName.toString).toSeq
+    assert(users("""new\s+[\w.]*BlockBuilder\(""", "NativeEncoder.scala") == Seq("InsertLoop.scala"))
+    assert(users("""ClickHouseHttp\.post\(""", "ClickHouseHttp.scala") == Seq("InsertLoop.scala"))
+  }
 }

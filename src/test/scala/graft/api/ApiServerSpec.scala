@@ -9,7 +9,19 @@ import graft.pipeline.PipelineService
 class ApiServerSpec extends SparkSpec {
 
   private lazy val dlqRoot = java.nio.file.Files.createTempDirectory("api_dlq").toString
-  private lazy val service = new PipelineService(spark, dlqRoot = Some(dlqRoot))
+  /** The one topic frame every config start on [[service]] reads. */
+  private lazy val source = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    MemoryStream[String]
+  }
+  // the live connectors are replaced through the service's seams: Kafka by
+  // `source`, ClickHouse by a fresh memory sink per start
+  private lazy val service = new PipelineService(spark, dlqRoot = Some(dlqRoot),
+    sourceReader = (_, _) => source.toDF.toDF("k"),
+    sinkAttach = (df, _, _, _) => df.writeStream.format("memory")
+      .queryName(s"rsm_${System.nanoTime()}").outputMode("append"))
   private lazy val server = new ApiServer(spark, service)
   private lazy val port = server.start()
   private lazy val client = HttpClient.newHttpClient()
@@ -135,16 +147,12 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("resume restarts a stopped pipeline over http") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val cfg =
-      """{"pipeline_id": "api-p3", "source": {"topics": [{"name": "t"}]}}""".stripMargin
+      """{"pipeline_id": "api-p3",
+        |  "source": {"brokers": ["broker:9092"], "topics": [{"name": "t"}]},
+        |  "sink": {"url": "jdbc:ch://ch:8123", "table": "out"}}""".stripMargin
     assert(post("/api/v1/pipeline", cfg)._1 == 201)
-    val mem = MemoryStream[String]
-    service.start("api-p3", mem.toDF.toDF("k"),
-      df => df.writeStream.format("memory").queryName(s"rsm_${System.nanoTime()}")
-        .outputMode("append").start())
+    assert(post("/api/v1/pipeline/api-p3/start", "")._1 == 200)
     assert(get("/api/v1/pipeline/api-p3/health")._2.contains("\"status\":\"Running\""))
     assert(post("/api/v1/pipeline/api-p3/stop", "")._1 == 200)
     assert(post("/api/v1/pipeline/api-p3/resume", "")._1 == 200)

@@ -2,11 +2,15 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Skew
+import graft.sink.ClickHouseSink
 
 class LifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -17,29 +21,166 @@ class LifecycleSpec extends SparkSpec {
     transform = Some(TransformConfig(Seq(
       TransformRule("upper(k)", "k", "string")))))
 
+  /** [[simpleCfg]] with the Kafka brokers and the sink URL a config start
+    * needs (a jdbc: URL, so no DESCRIBE TABLE runs). */
+  private def startableCfg(id: String) = simpleCfg(id).copy(
+    source = SourceConfig(brokers = Some(Seq("broker:9092")), topics = Seq(TopicConfig("t"))),
+    sink = Some(SinkConfig(table = "out", url = Some("jdbc:ch://ch:8123"))))
+
+  /** A service whose live connectors are replaced through its seams:
+    * every topic reads `source`, and the sink is a fresh memory sink per
+    * start, after `onAttach` sees the sink config. The config → connector
+    * translation is the real one. */
+  private def seamedService(source: => DataFrame, ckpt: String,
+                            dlqRoot: Option[String] = None,
+                            onAttach: ClickHouseSink.Config => Unit = _ => ()) =
+    new PipelineService(spark, dlqRoot = dlqRoot, checkpointRoot = Some(ckpt),
+      sourceReader = (_, _) => source,
+      sinkAttach = (df, cc, _, _) => {
+        onAttach(cc)
+        df.writeStream.format("memory").queryName(s"lc_${System.nanoTime()}")
+          .outputMode("append")
+      })
+
+  private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  private def activeIds: Set[java.util.UUID] = spark.streams.active.map(_.id).toSet
+
   test("pipeline lifecycle: create → start → stop → resume → terminate → delete") {
     implicit val sqlCtx = spark.sqlContext
-    val svc = new PipelineService(spark)
-    assert(svc.create(simpleCfg("p1")).isRight)
-    assert(svc.create(simpleCfg("p1")).isLeft) // duplicate id
+    val mem = MemoryStream[String]
+    val svc = seamedService(mem.toDF.toDF("k"), tempDir("graft_lc_ckpt"))
+    assert(svc.create(startableCfg("p1")).isRight)
+    assert(svc.create(startableCfg("p1")).isLeft) // duplicate id
     assert(svc.get("p1").map(_._2).contains(PipelineService.Created))
 
-    val mem = MemoryStream[String]
-    def startIt() = svc.start("p1", mem.toDF.toDF("k"),
-      df => df.writeStream.format("memory").queryName(s"lc_${System.nanoTime()}")
-        .outputMode("append").start())
-    assert(startIt().isRight)
+    assert(svc.startFromConfig("p1").isRight)
     assert(svc.get("p1").map(_._2).contains(PipelineService.Running))
-    assert(startIt().isLeft) // double-start rejected
+    assert(svc.startFromConfig("p1").isLeft) // double-start rejected
+    assert(svc.resume("p1").isLeft) // so is a resume of a running pipeline
     assert(svc.delete("p1").isLeft) // can't delete running
 
     assert(svc.stop("p1").isRight)
     assert(svc.get("p1").map(_._2).contains(PipelineService.Stopped))
-    assert(startIt().isRight) // resume
+    assert(svc.resume("p1").isRight)
+    assert(svc.get("p1").map(_._2).contains(PipelineService.Running))
     assert(svc.terminate("p1").isRight)
     assert(svc.get("p1").map(_._2).contains(PipelineService.Terminated))
     assert(svc.delete("p1").isRight)
     assert(svc.get("p1").isEmpty)
+  }
+
+  test("edit while stopped, then resume: the resumed pipeline runs the edited config") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val tables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val svc = seamedService(mem.toDF.toDF("k"), tempDir("graft_lc_edit"),
+      onAttach = cc => tables.add(cc.table))
+    val cfg = startableCfg("ed1")
+    assert(svc.create(cfg).isRight)
+    assert(svc.startFromConfig("ed1").isRight)
+    assert(svc.stop("ed1").isRight)
+    assert(svc.edit("ed1", cfg.copy(sink = cfg.sink.map(_.copy(table = "out_v2")))).isRight)
+    try {
+      assert(svc.resume("ed1").isRight)
+      assert(tables.asScala.toSeq == Seq("out", "out_v2"))
+    } finally { svc.terminate("ed1"); () }
+  }
+
+  /** Raw Kafka frames (`value` bytes, record `timestamp`) for a topic that
+    * declares `fields`, so a config start parses them and sends corrupt
+    * ones to the validation DLQ. */
+  private def rawTopic(name: String, fields: String*) =
+    TopicConfig(name, schemaFields = fields.map(FieldDef(_, "string")))
+
+  private def rawFrame(mem: MemoryStream[(String, java.sql.Timestamp)]): DataFrame =
+    mem.toDF.select(col("_1").cast("binary").as("value"), col("_2").as("timestamp"))
+
+  test("a validation-DLQ query that fails to start stops the sink query and records Failed") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, java.sql.Timestamp)]
+    val ckpt = tempDir("graft_lc_dlqfail")
+    val svc = seamedService(rawFrame(mem), ckpt, dlqRoot = Some(tempDir("graft_lc_dlqfail_dlq")))
+    val cfg = startableCfg("df1").copy(
+      source = SourceConfig(brokers = Some(Seq("broker:9092")), topics = Seq(rawTopic("t", "k"))))
+    assert(svc.create(cfg).isRight)
+    // a regular file where the side query's checkpoint directory belongs
+    Files.write(java.nio.file.Paths.get(ckpt, "df1_validation_dlq"), "x".getBytes)
+    val before = activeIds
+    val started = svc.startFromConfig("df1")
+    assert(started.isLeft, "the side query cannot start over a file")
+    assert(svc.get("df1").map(_._2).contains(PipelineService.Failed))
+    assert(activeIds.subsetOf(before), "no query of the pipeline may be left running")
+  }
+
+  test("join config start: two queries, sink first, both rebuilt on stop → resume") {
+    implicit val sqlCtx = spark.sqlContext
+    val frames = Map(
+      "left_t" -> MemoryStream[(String, java.sql.Timestamp)],
+      "right_t" -> MemoryStream[(String, java.sql.Timestamp)])
+    val outName = s"lc_join_${System.nanoTime()}"
+    val dlqRoot = tempDir("graft_lc_join_dlq")
+    val svc = new PipelineService(spark, dlqRoot = Some(dlqRoot),
+      checkpointRoot = Some(tempDir("graft_lc_join_ckpt")),
+      sourceReader = (_, kc) => rawFrame(frames(kc.topic)),
+      sinkAttach = (df, _, _, _) =>
+        df.writeStream.format("memory").queryName(outName).outputMode("append"))
+    val cfg = PipelineConfig(
+      pipelineId = "jn1",
+      source = SourceConfig(brokers = Some(Seq("broker:9092")),
+        topics = Seq(rawTopic("left_t", "id", "name"), rawTopic("right_t", "id", "email"))),
+      join = Some(JoinConfig(sources = Seq(
+        JoinSource("left_t", "id", "1h", "left", Some("timestamp")),
+        JoinSource("right_t", "id", "1h", "right", Some("timestamp"))),
+        projections = Seq(JoinProjection("left_t", "name", "name"),
+          JoinProjection("right_t", "email", "email")))),
+      sink = Some(SinkConfig(table = "out", url = Some("jdbc:ch://ch:8123"))))
+    // listener events arrive in start order
+    val startedNames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
+        startedNames.add(Option(e.name).getOrElse(""))
+      def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    def t(s: Int) = new java.sql.Timestamp(1735725600000L + s * 1000L)
+    def pipelineQueries(before: Set[java.util.UUID]) =
+      spark.streams.active.filterNot(q => before(q.id)).toSeq
+    def awaitStarted(n: Int): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (startedNames.size < n && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(startedNames.size == n, startedNames)
+    }
+    spark.streams.addListener(listener)
+    try {
+      assert(svc.create(cfg).isRight)
+      val before = activeIds
+      val started = svc.startFromConfig("jn1")
+      assert(started.isRight, started.swap.getOrElse(""))
+      awaitStarted(2)
+      assert(startedNames.asScala.toSeq.map(_ == outName) == Seq(true, false), "sink query first")
+      val queries = pipelineQueries(before)
+      assert(queries.size == 2)
+      frames("left_t").addData(("""{"id": "1", "name": "Ada"}""", t(0)), ("not json {", t(0)))
+      queries.foreach(_.processAllAvailable())
+      frames("right_t").addData(("""{"id": "1", "email": "ada@x"}""", t(1)))
+      queries.foreach(_.processAllAvailable())
+      assert(spark.table(outName).collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+        Seq(("Ada", "ada@x")))
+      assert(spark.read.parquet(s"$dlqRoot/jn1").select("component").collect()
+        .map(_.getString(0)).toSeq == Seq("ingestor"))
+
+      assert(svc.stop("jn1").isRight)
+      assert(pipelineQueries(before).isEmpty)
+      assert(svc.resume("jn1").isRight)
+      awaitStarted(4)
+      assert(startedNames.asScala.toSeq.drop(2).map(_ == outName) == Seq(true, false),
+        "the resumed sink query starts first too")
+      assert(pipelineQueries(before).size == 2)
+    } finally {
+      spark.streams.removeListener(listener)
+      try svc.terminate("jn1") catch { case _: Exception => () }
+    }
   }
 
   test("config-driven start over HTTP: create → start → stop → resume, MemoryStream seam") {

@@ -120,6 +120,46 @@ class PipelineWireSpec extends SparkSpec {
     } finally { kafka.stop(); ch.stop() }
   }
 
+  test("a join config whose mapping names a column the table lacks fails at start, before any query starts") {
+    val id = "join-typo-b00003"
+    val kafka = new Cluster(); kafka.addBroker()
+    val ch = new MiniClickHouseServer(); ch.start()
+    try {
+      kafka.addPartition("orders", 0)
+      kafka.addPartition("users", 0)
+      ch.createTable("default", "joined", Seq("id" -> "String", "email" -> "String"))
+      val cfgJson =
+        s"""{"pipeline_id": "$id",
+           |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+           |    "topics": [
+           |      {"name": "orders", "schema_fields": [{"name": "id", "type": "string"}]},
+           |      {"name": "users", "schema_fields": [{"name": "id", "type": "string"},
+           |                                          {"name": "email", "type": "string"}]}]},
+           |  "join": {"enabled": true, "sources": [
+           |      {"source_id": "orders", "join_key": "id", "time_window": "1h", "orientation": "left"},
+           |      {"source_id": "users", "join_key": "id", "time_window": "1h", "orientation": "right"}],
+           |    "projections": [
+           |      {"source_id": "orders", "field": "id", "output_name": "id"},
+           |      {"source_id": "users", "field": "email", "output_name": "email"}]},
+           |  "sink": {"url": "${ch.endpoint}", "database": "default", "table": "joined",
+           |    "table_mapping": [
+           |      {"field_name": "id", "column_name": "id", "column_type": "String"},
+           |      {"field_name": "email", "column_name": "emial", "column_type": "String"}]}}
+           |""".stripMargin
+      val svc = new PipelineService(spark,
+        dlqRoot = Some(Files.createTempDirectory("graft_pw_jt_dlq").toString),
+        checkpointRoot = Some(Files.createTempDirectory("graft_pw_jt_ckpt").toString),
+        sourceReader = wireReader(kafka.brokerList.head.address))
+      assert(svc.create(ReferenceConfig.fromJson(cfgJson)).isRight)
+      val active = spark.streams.active.map(_.id).toSet
+      val started = svc.startFromConfig(id)
+      assert(started.swap.exists(_.startsWith("sink schema validation: ")), started)
+      assert(started.swap.exists(_.contains("emial")), started)
+      assert(spark.streams.active.map(_.id).toSet.subsetOf(active),
+        "no query of the pipeline may start")
+    } finally { kafka.stop(); ch.stop() }
+  }
+
   test("pipeline over the NATIVE TCP sink leg: dedup + poison DLQ land identically") {
     // same feature topology, but the sink speaks ClickHouse's :9000 native
     // protocol (tcp:// scheme → streamed block INSERTs) against the TCP
