@@ -30,11 +30,11 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
                             // Kafka-less analogue of the reference's
                             // receiver→NATS hop)
                             otlpSpoolRoot: Option[String] = None,
-                            // live-connector seams: the default factories
-                            // bind real Kafka/ClickHouse; tests (and any
-                            // broker-less environment) inject MemoryStream /
-                            // memory-sink equivalents — the config→connector
-                            // translation above them is always the real code
+                            // live-connector seams: the defaults read Kafka
+                            // through graft-kafka and write ClickHouse; tests
+                            // inject MemoryStream / memory-sink equivalents —
+                            // the config→connector translation above them is
+                            // always the real code
                             sourceReader: (SparkSession, KafkaSource.Config) => DataFrame =
                               KafkaSource.readStream,
                             sinkAttach: (DataFrame, ClickHouseSink.Config, String, DataFrame => Unit) => DataStreamWriter[Row] =
@@ -43,6 +43,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
   import PipelineService._
 
   private val registry = new ConcurrentHashMap[String, Deployed]()
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
 
   // With a key configured, store files are AES-256-GCM sealed whole (the
   // reference AES-encrypts stored secrets, internal/encryption/; sealing
@@ -112,9 +113,9 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
              schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty): Either[String, String] = {
     val errs = PipelineConfig.validate(cfg, schemas)
     if (errs.nonEmpty) Left(errs.mkString("; "))
-    else if (registry.containsKey(cfg.pipelineId)) Left(s"pipeline ${cfg.pipelineId} already exists")
+    else if (registry.putIfAbsent(cfg.pipelineId, Deployed(cfg, None, Created)) != null)
+      Left(s"pipeline ${cfg.pipelineId} already exists")
     else {
-      registry.put(cfg.pipelineId, Deployed(cfg, None, Created))
       persist(cfg)
       Right(cfg.pipelineId)
     }
@@ -137,8 +138,10 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     * A fault past step 2 stops whatever this call started and records
     * Failed. Nothing from an earlier run is reused: stop → start (or
     * [[resume]]) rebuilds both queries from the config and restarts them
-    * from their checkpoints, so an edit made while stopped applies. */
-  def startFromConfig(id: String): Either[String, Unit] = withPipeline(id) { d =>
+    * from their checkpoints, so an edit made while stopped applies. The
+    * whole start holds the pipeline's lock, so of two concurrent starts
+    * the second sees the first one's Running entry. */
+  def startFromConfig(id: String): Either[String, Unit] = update(id) { d =>
     val cfg = d.config
     if (d.status == Running) Left(s"pipeline $id already running")
     else {
@@ -312,7 +315,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     * annotation; the next start/resume compiles the new config). */
   def edit(id: String, cfg: PipelineConfig,
            schemas: Map[String, org.apache.spark.sql.types.StructType] = Map.empty): Either[String, Unit] =
-    withPipeline(id) { d =>
+    update(id) { d =>
       if (d.status == Running) Left(s"pipeline $id is running; stop it first")
       else {
         val errs = PipelineConfig.validate(cfg, schemas)
@@ -326,7 +329,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     * updatePipelineName routes). */
   def patchMeta(id: String, name: Option[String],
                 metadata: Option[Map[String, String]]): Either[String, Unit] =
-    withPipeline(id) { d =>
+    update(id) { d =>
       val cfg = d.config.copy(
         name = name.orElse(d.config.name),
         metadata = metadata.getOrElse(d.config.metadata))
@@ -334,15 +337,18 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     }
 
   /** Health: lifecycle status + live query signals (reference
-    * getPipelineHealth). */
+    * getPipelineHealth). `query_active` holds only while every query the
+    * pipeline owns runs; `query_error` is the first dead one's failure. */
   def health(id: String): Either[String, Map[String, Any]] = withPipeline(id) { d =>
     val base = Map[String, Any]("pipeline_id" -> id, "status" -> d.status.toString)
     val live = d.query.map { q =>
+      val owned = q +: d.sideQueries
       val prog = Option(q.lastProgress)
       Map[String, Any](
-        "query_active" -> q.isActive,
+        "query_active" -> owned.forall(_.isActive),
         "input_rows_per_second" -> prog.map(_.inputRowsPerSecond).getOrElse(0.0),
-        "batch_id" -> prog.map(_.batchId).getOrElse(-1L))
+        "batch_id" -> prog.map(_.batchId).getOrElse(-1L)) ++
+        owned.flatMap(_.exception).headOption.map("query_error" -> _.getMessage)
     }.getOrElse(Map.empty[String, Any])
     Right(base ++ live)
   }
@@ -353,7 +359,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     withPipeline(id)(d => Right(d.resources))
 
   def patchResources(id: String, patch: Map[String, Resources]): Either[String, Map[String, Resources]] =
-    withPipeline(id) { d =>
+    update(id) { d =>
       val bad = patch.keys.filterNot(ComponentNames.contains)
       if (bad.nonEmpty) Left(s"unknown components: ${bad.mkString(", ")}")
       else validateResources(patch) match {
@@ -375,7 +381,7 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
     }
 
   /** Stop: halt the query, keep config + checkpoint (resumable). */
-  def stop(id: String): Either[String, Unit] = withPipeline(id) { d =>
+  def stop(id: String): Either[String, Unit] = update(id) { d =>
     d.query.foreach(_.stop())
     d.sideQueries.foreach(q => try q.stop() catch { case _: Exception => () })
     registry.put(id, d.copy(query = None, sideQueries = Nil, status = Stopped))
@@ -383,14 +389,14 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
   }
 
   /** Terminate: stop and drop from the registry. */
-  def terminate(id: String): Either[String, Unit] = withPipeline(id) { d =>
+  def terminate(id: String): Either[String, Unit] = update(id) { d =>
     d.query.foreach(_.stop())
     d.sideQueries.foreach(q => try q.stop() catch { case _: Exception => () })
     registry.put(id, d.copy(query = None, sideQueries = Nil, status = Terminated))
     Right(())
   }
 
-  def delete(id: String): Either[String, Unit] = withPipeline(id) { d =>
+  def delete(id: String): Either[String, Unit] = update(id) { d =>
     if (d.status == Running) Left(s"pipeline $id is running; stop it first")
     else { registry.remove(id); unpersist(id); Right(()) }
   }
@@ -403,6 +409,13 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
 
   private def withPipeline[A](id: String)(f: Deployed => Either[String, A]): Either[String, A] =
     Option(registry.get(id)).toRight(s"no such pipeline: $id").flatMap(f)
+
+  /** [[withPipeline]] for a call that rewrites the entry: it runs under the
+    * pipeline's lock on the entry as it stands once the lock is held, so no
+    * two such calls act on one snapshot (and none overwrites the queries
+    * another just started). */
+  private def update[A](id: String)(f: Deployed => Either[String, A]): Either[String, A] =
+    locks.computeIfAbsent(id, _ => new Object).synchronized(withPipeline(id)(f))
 
   // ---- DLQ API (state / consume / purge over a parquet-backed DLQ) ----
   //

@@ -2,112 +2,22 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Kafka source builder — the reference's consumer configuration surface
-  * (glassflow-api/internal/kafka/consumer.go:102-210; constants
-  * internal/constants.go:246-259) mapped onto the Structured Streaming Kafka
-  * source. Offsets live in the checkpoint (replacing manual commits), and
-  * fetch tuning maps to maxOffsetsPerTrigger/minPartitions:
-  *
-  *  - earliest/latest initial offset → startingOffsets
-  *  - SASL PLAIN / SCRAM-SHA-256 / SCRAM-SHA-512 + TLS → kafka.sasl.* opts
-  *  - backpressure → maxOffsetsPerTrigger (micro-batch pull, no retry loop)
-  *  - parallelism → minPartitions (defaults to topic partition count; at
-  *    100 TB/day raise it so each task handles one fetch stream)
-  */
+/** The Kafka source a config-started pipeline reads: a streaming
+  * `graft-kafka` read ([[graft.sources.kafka.KafkaWireSource]], the wire
+  * protocol over TCP) built from the pipeline config alone. Offsets live
+  * in the checkpoint; each completed batch also commits its end offsets
+  * to the consumer group (reference consumer.go:318), so Kafka-side lag
+  * tooling tracks the pipeline. A retention-deleted range is skipped, not
+  * fatal (`failOnDataLoss=false`). */
 object KafkaSource {
 
-  final case class Config(
-    brokers: Seq[String],
-    topic: String,
-    consumerGroup: String = "graft",
-    initialOffset: String = "earliest",         // earliest | latest
-    saslMechanism: Option[String] = None,       // PLAIN | SCRAM-SHA-256 | SCRAM-SHA-512 | GSSAPI
-    saslUsername: Option[String] = None,
-    saslPassword: Option[String] = None,
-    tlsEnabled: Boolean = false,
-    skipAuth: Boolean = false,
-    maxOffsetsPerTrigger: Option[Long] = None,
-    minPartitions: Option[Int] = None,
-    // GSSAPI/Kerberos (reference consumer.go:155-181: service name, realm,
-    // keytab-or-password client). The JVM reads /etc/krb5.conf by default;
-    // point java.security.krb5.conf at `krb5ConfPath` when set.
-    kerberosServiceName: Option[String] = None,
-    kerberosRealm: Option[String] = None,
-    kerberosKeytabPath: Option[String] = None,
-    krb5ConfPath: Option[String] = None)
+  final case class Config(brokers: Seq[String], topic: String, consumerGroup: String)
 
-  /** Escape a value for embedding in a JAAS double-quoted string: a raw
-    * quote/backslash would break the config or inject JAAS directives. */
-  private[sources] def jaasEscape(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case c    => c.toString
-    }
-
-  /** The spark.readStream options this config compiles to. Pure — unit
-    * testable without a broker. */
-  def options(c: Config): Map[String, String] = {
-    require(c.brokers.nonEmpty, "kafka: brokers must be non-empty")
-    require(c.topic.nonEmpty, "kafka: topic must be non-empty")
-    val base = Map(
-      "kafka.bootstrap.servers" -> c.brokers.mkString(","),
-      "subscribe" -> c.topic,
-      "startingOffsets" -> (c.initialOffset match {
-        case "earliest" | "latest" => c.initialOffset
-        case other => throw new IllegalArgumentException(s"kafka: bad initial offset $other")
-      }),
-      "kafka.group.id" -> c.consumerGroup,
-      "failOnDataLoss" -> "false")
-    val auth: Map[String, String] = c.saslMechanism match {
-      case _ if c.skipAuth => Map.empty
-      case None =>
-        if (c.tlsEnabled) Map("kafka.security.protocol" -> "SSL") else Map.empty
-      case Some(mech) if mech.toUpperCase == "GSSAPI" =>
-        // Kerberos (consumer.go:155-181): keytab mode when a keytab is
-        // given, else the JVM ticket cache (JAAS cannot carry a password).
-        val service = c.kerberosServiceName.getOrElse(
-          throw new IllegalArgumentException("kafka: GSSAPI requires kerberos service name"))
-        val principal = (c.saslUsername, c.kerberosRealm) match {
-          case (Some(u), Some(r)) if !u.contains("@") => s"$u@$r"
-          case (Some(u), _) => u
-          case _ => throw new IllegalArgumentException("kafka: GSSAPI requires sasl username (principal)")
-        }
-        val clientAuth = c.kerberosKeytabPath match {
-          case Some(kt) =>
-            s"""useKeyTab=true storeKey=true keyTab="${jaasEscape(kt)}" principal="${jaasEscape(principal)}";"""
-          case None =>
-            s"""useTicketCache=true principal="${jaasEscape(principal)}";"""
-        }
-        Map(
-          "kafka.security.protocol" -> (if (c.tlsEnabled) "SASL_SSL" else "SASL_PLAINTEXT"),
-          "kafka.sasl.mechanism" -> "GSSAPI",
-          "kafka.sasl.kerberos.service.name" -> service,
-          "kafka.sasl.jaas.config" ->
-            s"com.sun.security.auth.module.Krb5LoginModule required $clientAuth")
-      case Some(mech) =>
-        val (module, mechName) = mech.toUpperCase match {
-          case "PLAIN" => ("org.apache.kafka.common.security.plain.PlainLoginModule", "PLAIN")
-          case "SCRAM-SHA-256" => ("org.apache.kafka.common.security.scram.ScramLoginModule", "SCRAM-SHA-256")
-          case "SCRAM-SHA-512" => ("org.apache.kafka.common.security.scram.ScramLoginModule", "SCRAM-SHA-512")
-          case other => throw new IllegalArgumentException(s"kafka: unsupported SASL mechanism $other")
-        }
-        val (user, pass) = (c.saslUsername.getOrElse(""), c.saslPassword.getOrElse(""))
-        Map(
-          "kafka.security.protocol" -> (if (c.tlsEnabled) "SASL_SSL" else "SASL_PLAINTEXT"),
-          "kafka.sasl.mechanism" -> mechName,
-          "kafka.sasl.jaas.config" ->
-            s"""$module required username="${jaasEscape(user)}" password="${jaasEscape(pass)}";""")
-    }
-    val tuning = c.maxOffsetsPerTrigger.map("maxOffsetsPerTrigger" -> _.toString).toMap ++
-      c.minPartitions.map("minPartitions" -> _.toString).toMap
-    base ++ auth ++ tuning
-  }
-
-  /** Streaming read (requires the spark-sql-kafka connector on the
-    * cluster classpath; not bundled in this build environment). */
   def readStream(spark: SparkSession, c: Config): DataFrame =
-    options(c).foldLeft(spark.readStream.format("kafka")) {
-      case (r, (k, v)) => r.option(k, v)
-    }.load()
+    spark.readStream.format("graft-kafka")
+      .option("brokers", c.brokers.mkString(","))
+      .option("topic", c.topic)
+      .option("kafka.group.id", c.consumerGroup)
+      .option("failOnDataLoss", "false")
+      .load()
 }

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `format("graft-kafka")` — a DataSource V2 Kafka reader speaking the real
   * wire protocol via [[WireClient]], with the SAME output schema as the
   * stock Kafka source (key/value binary, topic, partition, offset,
-  * timestamp, timestampType), so pipelines written against `format("kafka")`
-  * port by changing only the format string. Exists because this build
+  * timestamp, timestampType), so pipelines written against the stock
+  * source port by changing only the format string. Exists because this build
   * environment carries no Kafka connector artifact; the protocol is public
   * and small, and a source driven over a REAL socket (offset planning →
   * Fetch → CRC-verified record batches → checkpoint commit) verifies the
@@ -81,7 +81,7 @@ object KafkaWireSource {
 
   /** The stock source's headers column: array<struct<key:string,value:binary>>,
     * appended only when includeHeaders=true so the default schema stays
-    * byte-identical to format("kafka")'s. */
+    * byte-identical to the stock source's. */
   val HeadersField: StructField = StructField("headers",
     ArrayType(StructType(Seq(
       StructField("key", StringType), StructField("value", BinaryType)))))
@@ -125,7 +125,7 @@ object KafkaWireSource {
       throw new IllegalArgumentException("graft-kafka: 'brokers' option is required"))
     // `topic`, `topics`, or the stock source's `subscribe` — all accept a
     // comma-separated list; one query can read several topics exactly like
-    // format("kafka")'s subscribe. `subscribePattern` instead resolves the
+    // the stock source's subscribe. `subscribePattern` instead resolves the
     // topic set by regex against the broker's full topic list — and in
     // streaming mode the pattern RE-RESOLVES each trigger, so topics
     // created mid-stream that match start flowing from earliest.

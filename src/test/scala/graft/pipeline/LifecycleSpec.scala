@@ -113,6 +113,68 @@ class LifecycleSpec extends SparkSpec {
     assert(activeIds.subsetOf(before), "no query of the pipeline may be left running")
   }
 
+  test("two concurrent starts of one pipeline: one runs, the other is told it already runs") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val prefix = s"lc_race_${System.nanoTime()}"
+    // a slow source read holds each start between its status check and its
+    // registry update, where two unserialized starts would both get through
+    val svc = new PipelineService(spark, checkpointRoot = Some(tempDir("graft_lc_race")),
+      sourceReader = (_, _) => { Thread.sleep(300); mem.toDF.toDF("k") },
+      sinkAttach = (df, _, _, _) => df.writeStream.format("memory")
+        .queryName(s"${prefix}_${System.nanoTime()}").outputMode("append"))
+    assert(svc.create(startableCfg("rc1")).isRight)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, Unit]]()
+    val threads = Seq.fill(2)(new Thread(() => {
+      gate.await(); outcomes.add(svc.startFromConfig("rc1")); ()
+    }))
+    threads.foreach(_.start())
+    gate.countDown()
+    threads.foreach(_.join(60000))
+    try {
+      val got = outcomes.asScala.toSeq
+      assert(got.count(_.isRight) == 1, got)
+      assert(got.count(_.swap.exists(_ == "pipeline rc1 already running")) == 1, got)
+      assert(svc.get("rc1").map(_._2).contains(PipelineService.Running))
+    } finally { svc.stop("rc1"); () }
+    assert(!spark.streams.active.exists(q => Option(q.name).exists(_.startsWith(prefix))),
+      "stop reaches every query the two starts made")
+  }
+
+  test("health reads inactive, with the failure, when only the validation-DLQ query dies") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, java.sql.Timestamp)]
+    val dlqRoot = tempDir("graft_lc_health_dlq")
+    val svc = seamedService(rawFrame(mem), tempDir("graft_lc_health"), dlqRoot = Some(dlqRoot))
+    val cfg = startableCfg("hl1").copy(
+      source = SourceConfig(brokers = Some(Seq("broker:9092")), topics = Seq(rawTopic("t", "k"))))
+    assert(svc.create(cfg).isRight)
+    // a regular file where the pipeline's DLQ directory belongs: the side
+    // query dies on its first dead letter; the memory sink never writes there
+    Files.write(java.nio.file.Paths.get(dlqRoot, "hl1"), "x".getBytes)
+    val before = activeIds
+    assert(svc.startFromConfig("hl1").isRight)
+    try {
+      def health() = svc.health("hl1").getOrElse(fail("no health for hl1"))
+      assert(health()("query_active") == true)
+      assert(!health().contains("query_error"))
+      val t0 = new java.sql.Timestamp(1735725600000L)
+      mem.addData(("""{"k": "a"}""", t0), ("not json {", t0))
+      val queries = spark.streams.active.filterNot(q => before(q.id)).toSeq
+      assert(queries.size == 2)
+      queries.foreach(q => try q.processAllAvailable() catch { case _: Exception => () })
+      val deadline = System.currentTimeMillis() + 30000
+      while (health()("query_active") == true && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val h = health()
+      assert(h("query_active") == false, h)
+      assert(h.get("query_error").exists(_.toString.nonEmpty), h)
+      assert(h("status") == "Running")
+      assert(queries.count(_.isActive) == 1, "the sink query still runs")
+    } finally { svc.terminate("hl1"); () }
+  }
+
   test("join config start: two queries, sink first, both rebuilt on stop → resume") {
     implicit val sqlCtx = spark.sqlContext
     val frames = Map(

@@ -2,27 +2,22 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.sources.KafkaSource
 import graft.sources.kafka.MiniKafkaBroker.Cluster
 
 /** Replays the reference's full-pipeline BDD feature
   * (glassflow-api/tests/features/pipeline/pipeline.feature) with the REAL
   * front door end-to-end: raw JSON events on [[Cluster]] → read over TCP
-  * by `format("graft-kafka")` (the source seam substitutes ONLY the broker
-  * address — the frame is the genuine binary Kafka shape) → config-driven
+  * by the service's own Kafka reader (the config's `brokers` names the
+  * fixture; the frame is the genuine binary Kafka shape) → config-driven
   * start parses against the declared topic schema (the ingestor leg) →
   * dedup / join per config → sink seam. This exercises the raw-frame path
   * a real cluster takes, which the MemoryStream seams bypass. */
 class PipelineFeatureSpec extends SparkSpec {
 
-  /** Source seam: real graft-kafka read, broker address from the fixture,
-    * topic + everything else from the pipeline config. */
-  private def wireReader(address: String): (SparkSession, KafkaSource.Config) => DataFrame =
-    (s, kc) => s.readStream.format("graft-kafka")
-      .option("brokers", address).option("topic", kc.topic).load()
+  private def brokers(c: Cluster): String = c.brokerList.head.address
 
   private def memorySink(outName: String) =
     (df: DataFrame, _: graft.sink.ClickHouseSink.Config, _: String, _: DataFrame => Unit) =>
@@ -40,12 +35,12 @@ class PipelineFeatureSpec extends SparkSpec {
     spark.streams.active.filterNot(q => before.containsKey(q.runId))
       .foreach(q => try q.processAllAvailable() catch { case _: Exception => () })
 
-  private def baseCfg(id: String, dedup: Boolean): String = {
+  private def baseCfg(id: String, dedup: Boolean, c: Cluster): String = {
     val dd = if (dedup)
       ""","deduplication": {"enabled": true, "id_field": "id", "time_window": "1h"}"""
     else ""
     s"""{"pipeline_id": "$id",
-       |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+       |  "source": {"kind": "kafka", "brokers": ["${brokers(c)}"],
        |    "topics": [{"name": "t", "consumer_group": "cg",
        |      "schema_fields": [{"name": "id", "type": "string"},
        |                        {"name": "name", "type": "string"}]$dd}]},
@@ -56,14 +51,13 @@ class PipelineFeatureSpec extends SparkSpec {
        |""".stripMargin
   }
 
-  private def runPipeline(id: String, cfgJson: String, cluster: Cluster,
+  private def runPipeline(id: String, cfgJson: String,
                           outName: String, dlqRoot: Option[String] = None)
                          (assertions: PipelineService => Unit): Unit = {
     markExisting()
     val svc = new PipelineService(spark,
       dlqRoot = dlqRoot,
       checkpointRoot = Some(Files.createTempDirectory("graft_pf_ckpt").toString),
-      sourceReader = wireReader(cluster.brokerList.head.address),
       sinkAttach = memorySink(outName))
     try {
       assert(svc.create(ReferenceConfig.fromJson(cfgJson)).isRight)
@@ -87,7 +81,7 @@ class PipelineFeatureSpec extends SparkSpec {
       "2" -> """{"id": "456", "name": "Jane Smith"}""",
       "3" -> """{"id": "789", "name": "Bob Johnson"}""",
       "4" -> """{"id": "789", "name": "Ulm Petterson"}"""))
-    try runPipeline("pf-dedup", baseCfg("pf-dedup", dedup = true), c, "pf_dedup_out") { _ =>
+    try runPipeline("pf-dedup", baseCfg("pf-dedup", dedup = true, c), "pf_dedup_out") { _ =>
       assert(collectOut("pf_dedup_out", "id", "name") == Set(
         Seq("123", "John Doe"), Seq("456", "Jane Smith"), Seq("789", "Bob Johnson")))
     } finally c.stop()
@@ -100,7 +94,7 @@ class PipelineFeatureSpec extends SparkSpec {
       "2" -> """{"id": "456", "name": "Judy Smith"}""",
       "3" -> """{"id": "789", "name": "Bob Bishop"}""",
       "4" -> """{"id": "789", "name": "Uliana Gromova"}"""))
-    try runPipeline("pf-plain", baseCfg("pf-plain", dedup = false), c, "pf_plain_out") { _ =>
+    try runPipeline("pf-plain", baseCfg("pf-plain", dedup = false, c), "pf_plain_out") { _ =>
       assert(spark.table("pf_plain_out").count() == 4)
       assert(collectOut("pf_plain_out", "id", "name").size == 4)
     } finally c.stop()
@@ -113,16 +107,17 @@ class PipelineFeatureSpec extends SparkSpec {
     c.append("t", 1, Seq("2" -> """{"id": "456", "name":"Pete Roller"}"""))
     c.append("t", 2, Seq("3" -> """{"id": "789", "name":"Fedor Smolov"}"""))
     c.append("t", 0, Seq("4" -> """{"id": "789", "name":"Fedor Smolov"}"""))
-    try runPipeline("pf-parts", baseCfg("pf-parts", dedup = true), c, "pf_parts_out") { _ =>
+    try runPipeline("pf-parts", baseCfg("pf-parts", dedup = true, c), "pf_parts_out") { _ =>
       assert(collectOut("pf_parts_out", "id", "name") == Set(
         Seq("123", "Max Wilson"), Seq("456", "Pete Roller"), Seq("789", "Fedor Smolov")))
     } finally c.stop()
   }
 
   test("pipeline.feature: dotted field names (ECS-style flat keys)") {
+    val c = new Cluster(); c.addBroker(); c.addPartition("t", 0)
     val cfg =
-      """{"pipeline_id": "pf-dotted",
-        |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+      s"""{"pipeline_id": "pf-dotted",
+        |  "source": {"kind": "kafka", "brokers": ["${brokers(c)}"],
         |    "topics": [{"name": "t", "consumer_group": "cg",
         |      "schema_fields": [{"name": "id", "type": "string"},
         |                        {"name": "user.name", "type": "string"}]}]},
@@ -131,11 +126,10 @@ class PipelineFeatureSpec extends SparkSpec {
         |      {"field_name": "id", "column_name": "id", "column_type": "String"},
         |      {"field_name": "user.name", "column_name": "user_name", "column_type": "String"}]}}
         |""".stripMargin
-    val c = new Cluster(); c.addBroker(); c.addPartition("t", 0)
     c.append("t", 0, Seq(
       "1" -> """{"id": "1", "user.name": "Ada"}""",
       "2" -> """{"id": "2", "user.name": "Grace"}"""))
-    try runPipeline("pf-dotted", cfg, c, "pf_dotted_out") { _ =>
+    try runPipeline("pf-dotted", cfg, "pf_dotted_out") { _ =>
       val rows = spark.table("pf_dotted_out")
         .selectExpr("id", "`user.name`").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
@@ -150,7 +144,7 @@ class PipelineFeatureSpec extends SparkSpec {
       "1" -> """{"id": "123", "name": "Alice"}""",
       "2" -> """not json at all""",
       "3" -> """{"id": "456", "name": "Bob"}"""))
-    try runPipeline("pf-dlq", baseCfg("pf-dlq", dedup = false), c, "pf_dlq_out",
+    try runPipeline("pf-dlq", baseCfg("pf-dlq", dedup = false, c), "pf_dlq_out",
       dlqRoot = Some(dlqRoot)) { _ =>
       assert(collectOut("pf_dlq_out", "id", "name") == Set(
         Seq("123", "Alice"), Seq("456", "Bob")))
@@ -178,7 +172,6 @@ class PipelineFeatureSpec extends SparkSpec {
     val svc = new PipelineService(spark,
       dlqRoot = Some(dlqRoot),
       checkpointRoot = Some(Files.createTempDirectory("graft_pf_ckpt2").toString),
-      sourceReader = wireReader(c.brokerList.head.address),
       sinkAttach = (df, _, checkpoint, _) => df.writeStream
         .option("checkpointLocation", checkpoint)
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -186,7 +179,7 @@ class PipelineFeatureSpec extends SparkSpec {
             .foreach(r => rows.add((r.getString(0), r.getString(1))))
         })
     try {
-      assert(svc.create(ReferenceConfig.fromJson(baseCfg("pf-resume", dedup = false))).isRight)
+      assert(svc.create(ReferenceConfig.fromJson(baseCfg("pf-resume", dedup = false, c))).isRight)
       assert(svc.startFromConfig("pf-resume").isRight)
       drainAll()
       assert(rows.size == 1)
@@ -214,9 +207,11 @@ class PipelineFeatureSpec extends SparkSpec {
   }
 
   test("pipeline.feature: Kafka to ClickHouse pipeline with join only (config start, raw frames)") {
+    val c = new Cluster(); c.addBroker()
+    c.addPartition("left_stream", 0); c.addPartition("right_stream", 0)
     val cfg =
-      """{"pipeline_id": "pf-join",
-        |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+      s"""{"pipeline_id": "pf-join",
+        |  "source": {"kind": "kafka", "brokers": ["${brokers(c)}"],
         |    "topics": [
         |      {"name": "left_stream", "consumer_group": "cg",
         |        "schema_fields": [{"name": "id", "type": "string"},
@@ -239,8 +234,6 @@ class PipelineFeatureSpec extends SparkSpec {
         |      {"field_name": "name", "column_name": "name", "column_type": "String"},
         |      {"field_name": "email", "column_name": "email", "column_type": "String"}]}}
         |""".stripMargin
-    val c = new Cluster(); c.addBroker()
-    c.addPartition("left_stream", 0); c.addPartition("right_stream", 0)
     // lefts first (buffer), rights 1s later (drain) — inside the windows
     c.append("left_stream", 0, Seq(
       "1" -> """{"id": "1", "name": "Alice"}""",
@@ -249,7 +242,7 @@ class PipelineFeatureSpec extends SparkSpec {
     c.append("right_stream", 0, Seq(
       "a" -> """{"id": "2", "email": "bob@mailbox.com"}""",
       "b" -> """{"id": "1", "email": "alice@gmail.com"}"""), timestampMs = 1700000001000L)
-    try runPipeline("pf-join", cfg, c, "pf_join_out") { _ =>
+    try runPipeline("pf-join", cfg, "pf_join_out") { _ =>
       drainAll() // join emits on the right-side batch
       assert(collectOut("pf_join_out", "id", "name", "email") == Set(
         Seq("2", "Bob", "bob@mailbox.com"),

@@ -2,17 +2,14 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.SparkSpec
 import graft.sink.MiniClickHouseServer
-import graft.sources.KafkaSource
 import graft.sources.kafka.MiniKafkaBroker.Cluster
 
 /** The reference's WHOLE topology on real sockets in one scenario
   * (glassflow-api/tests/features/pipeline/pipeline.feature "Kafka to
   * ClickHouse pipeline with deduplication"): raw JSON events on a live
-  * Kafka broker fixture → read over TCP by `format("graft-kafka")` →
+  * Kafka broker fixture → read over TCP by the service's own Kafka reader →
   * schema validate (ingestor leg, corrupt rows → DLQ) → windowed dedup →
   * ClickHouse HTTP INSERT over TCP against [[MiniClickHouseServer]]
   * (which validates values against declared column types and answers
@@ -20,10 +17,6 @@ import graft.sources.kafka.MiniKafkaBroker.Cluster
   * the checkpoint in the middle, asserting exactly-once delivery and
   * per-row poison DLQ envelopes from BOTH legs. */
 class PipelineWireSpec extends SparkSpec {
-
-  private def wireReader(address: String): (SparkSession, KafkaSource.Config) => DataFrame =
-    (s, kc) => s.readStream.format("graft-kafka")
-      .option("brokers", address).option("topic", kc.topic).load()
 
   private val before = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Boolean]()
   private def markExisting(): Unit =
@@ -54,7 +47,7 @@ class PipelineWireSpec extends SparkSpec {
 
       val cfgJson =
         s"""{"pipeline_id": "$id",
-           |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+           |  "source": {"kind": "kafka", "brokers": ["${kafka.brokerList.head.address}"],
            |    "topics": [{"name": "test_topic", "consumer_group": "gf-cg-b00001",
            |      "schema_fields": [{"name": "id", "type": "string"},
            |                        {"name": "name", "type": "string"}],
@@ -69,9 +62,9 @@ class PipelineWireSpec extends SparkSpec {
 
       val dlqRoot = Files.createTempDirectory("graft_pw_dlq").toString
       val ckptRoot = Files.createTempDirectory("graft_pw_ckpt").toString
+      // no source reader injected: the service reads Kafka as ApiMain's does
       def newService() = new PipelineService(spark,
-        dlqRoot = Some(dlqRoot), checkpointRoot = Some(ckptRoot),
-        sourceReader = wireReader(kafka.brokerList.head.address))
+        dlqRoot = Some(dlqRoot), checkpointRoot = Some(ckptRoot))
 
       markExisting()
       val svc1 = newService()
@@ -116,6 +109,12 @@ class PipelineWireSpec extends SparkSpec {
         // the duplicate id 123 — only 007 is new
         assert(tableRows() == Seq(("123", "John Doe"), ("456", "Jane Smith"),
           ("789", "Bob Johnson"), ("007", "James Bond")).sorted)
+        // the config's consumer group reached the broker: completed batches
+        // commit their end offsets to it (best-effort, so wait for one)
+        val committed = () => kafka.groupOffsets.getOrDefault(("gf-cg-b00001", "test_topic", 0), -1L)
+        val deadline = System.currentTimeMillis() + 30000
+        while (committed() <= 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+        assert(committed() > 0, s"no committed offset for gf-cg-b00001: ${kafka.groupOffsets}")
       } finally { svc2.terminate(id); () }
     } finally { kafka.stop(); ch.stop() }
   }
@@ -130,7 +129,7 @@ class PipelineWireSpec extends SparkSpec {
       ch.createTable("default", "joined", Seq("id" -> "String", "email" -> "String"))
       val cfgJson =
         s"""{"pipeline_id": "$id",
-           |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+           |  "source": {"kind": "kafka", "brokers": ["${kafka.brokerList.head.address}"],
            |    "topics": [
            |      {"name": "orders", "schema_fields": [{"name": "id", "type": "string"}]},
            |      {"name": "users", "schema_fields": [{"name": "id", "type": "string"},
@@ -148,8 +147,7 @@ class PipelineWireSpec extends SparkSpec {
            |""".stripMargin
       val svc = new PipelineService(spark,
         dlqRoot = Some(Files.createTempDirectory("graft_pw_jt_dlq").toString),
-        checkpointRoot = Some(Files.createTempDirectory("graft_pw_jt_ckpt").toString),
-        sourceReader = wireReader(kafka.brokerList.head.address))
+        checkpointRoot = Some(Files.createTempDirectory("graft_pw_jt_ckpt").toString))
       assert(svc.create(ReferenceConfig.fromJson(cfgJson)).isRight)
       val active = spark.streams.active.map(_.id).toSet
       val started = svc.startFromConfig(id)
@@ -181,7 +179,7 @@ class PipelineWireSpec extends SparkSpec {
 
       val cfgJson =
         s"""{"pipeline_id": "$id",
-           |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+           |  "source": {"kind": "kafka", "brokers": ["${kafka.brokerList.head.address}"],
            |    "topics": [{"name": "tcp_topic", "consumer_group": "gf-cg-b00002",
            |      "schema_fields": [{"name": "id", "type": "string"},
            |                        {"name": "name", "type": "string"}],
@@ -197,8 +195,7 @@ class PipelineWireSpec extends SparkSpec {
       val dlqRoot = Files.createTempDirectory("graft_pw_tcp_dlq").toString
       val ckptRoot = Files.createTempDirectory("graft_pw_tcp_ckpt").toString
       val svc = new PipelineService(spark,
-        dlqRoot = Some(dlqRoot), checkpointRoot = Some(ckptRoot),
-        sourceReader = wireReader(kafka.brokerList.head.address))
+        dlqRoot = Some(dlqRoot), checkpointRoot = Some(ckptRoot))
       markExisting()
       assert(svc.create(ReferenceConfig.fromJson(cfgJson)).isRight)
       val started = svc.startFromConfig(id)

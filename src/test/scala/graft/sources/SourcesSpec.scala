@@ -8,68 +8,6 @@ import graft.SparkSpec
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  test("kafka options: plain, sasl, tls combinations") {
-    val base = KafkaSource.Config(Seq("b1:9092", "b2:9092"), "t1", "cg")
-    val o1 = KafkaSource.options(base)
-    assert(o1("kafka.bootstrap.servers") == "b1:9092,b2:9092")
-    assert(o1("subscribe") == "t1")
-    assert(o1("startingOffsets") == "earliest")
-    assert(!o1.contains("kafka.security.protocol"))
-
-    val o2 = KafkaSource.options(base.copy(
-      saslMechanism = Some("SCRAM-SHA-256"),
-      saslUsername = Some("u"), saslPassword = Some("p"), tlsEnabled = true))
-    assert(o2("kafka.security.protocol") == "SASL_SSL")
-    assert(o2("kafka.sasl.mechanism") == "SCRAM-SHA-256")
-    assert(o2("kafka.sasl.jaas.config").contains("ScramLoginModule"))
-
-    val o3 = KafkaSource.options(base.copy(tlsEnabled = true))
-    assert(o3("kafka.security.protocol") == "SSL")
-
-    assertThrows[IllegalArgumentException](
-      KafkaSource.options(base.copy(initialOffset = "nonsense")))
-    assertThrows[IllegalArgumentException](
-      KafkaSource.options(base.copy(saslMechanism = Some("GSSAPI-NOPE"))))
-  }
-
-  test("kafka jaas config escapes credential metacharacters") {
-    val base = KafkaSource.Config(Seq("b:9092"), "t", "cg")
-    val o = KafkaSource.options(base.copy(
-      saslMechanism = Some("PLAIN"),
-      saslUsername = Some("""u"se\r"""),
-      saslPassword = Some("""p;a"ss""")))
-    val jaas = o("kafka.sasl.jaas.config")
-    assert(jaas.contains("""username="u\"se\\r""""))
-    assert(jaas.contains("""password="p;a\"ss""""))
-    // the quoted value cannot terminate the directive early
-    assert(jaas.endsWith("\";"))
-  }
-
-  test("kafka GSSAPI maps kerberos config onto JAAS + service name") {
-    val base = KafkaSource.Config(Seq("b:9092"), "t", "cg",
-      saslMechanism = Some("GSSAPI"), saslUsername = Some("svc-user"),
-      kerberosServiceName = Some("kafka"), kerberosRealm = Some("EXAMPLE.COM"))
-    val keytab = KafkaSource.options(base.copy(
-      kerberosKeytabPath = Some("/etc/security/kt.keytab"), tlsEnabled = true))
-    assert(keytab("kafka.security.protocol") == "SASL_SSL")
-    assert(keytab("kafka.sasl.mechanism") == "GSSAPI")
-    assert(keytab("kafka.sasl.kerberos.service.name") == "kafka")
-    val jaas = keytab("kafka.sasl.jaas.config")
-    assert(jaas.startsWith("com.sun.security.auth.module.Krb5LoginModule required"))
-    assert(jaas.contains("""useKeyTab=true storeKey=true keyTab="/etc/security/kt.keytab""""))
-    assert(jaas.contains("""principal="svc-user@EXAMPLE.COM""""))
-
-    // no keytab → ticket cache; principal already qualified is untouched
-    val cache = KafkaSource.options(base.copy(saslUsername = Some("u@OTHER.ORG")))
-    assert(cache("kafka.sasl.jaas.config").contains(
-      """useTicketCache=true principal="u@OTHER.ORG""""))
-
-    assertThrows[IllegalArgumentException](
-      KafkaSource.options(base.copy(kerberosServiceName = None)))
-    assertThrows[IllegalArgumentException](
-      KafkaSource.options(base.copy(saslUsername = None)))
-  }
-
   test("schema registry wire-format prefix is stripped, schema id extracted") {
     val framed = Array[Byte](0, 0, 0, 1, 42) ++ """{"a":1}""".getBytes("UTF-8")
     val unframed = """{"a":2}""".getBytes("UTF-8")
