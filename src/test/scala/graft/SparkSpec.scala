@@ -12,11 +12,14 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** Where `saveAsTable` writes: under target/, not the checkout root. */
+  val warehouse: String = "target/spark-warehouse"
 }
 
 abstract class SparkSpec extends AnyFunSuite {

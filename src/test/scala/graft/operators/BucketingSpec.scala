@@ -13,7 +13,7 @@ import graft.SparkSpec
 class BucketingSpec extends SparkSpec {
 
   test("bucketed tables join without a shuffle exchange") {
-    val warehouse = new java.io.File("spark-warehouse")
+    val warehouse = new java.io.File(SparkSpec.warehouse)
     try {
       graft.Tables.orders(spark, sf).write
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
